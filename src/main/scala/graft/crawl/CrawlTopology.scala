@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.UrlFunctions
 import graft.operators.UrlStateMerger
 import graft.schema.{CrawlStateUrl, FetchStatus => FS}
+import graft.util.Observed
 
 /** Crawl configuration (defaults mirror the reference's knobs:
   * …/flinkcrawler/topology/CrawlTopologyBuilder.java:87-98,
@@ -62,7 +63,7 @@ final case class CrawlConfig(
     // the capture log.
     adaptiveRecrawl: Option[(Long, Long)] = None,
     // newest captures remembered per URL for the change estimate; the
-    // history fold prunes to this window (the scoreHistory discipline)
+    // history fold prunes to this window (like the domain score window)
     // so per-round cost is O(recent captures), not O(crawl lifetime)
     captureWindow: Int = 8,
     // parse watchdog (reference ParserPolicy.java:14-18: kill a parse at
@@ -103,15 +104,16 @@ final case class CrawlConfig(
     // threads instead of tasks. 1 = serial (deterministic test path).
     robotsThreads: Int = 10,
     fetchThreads: Int = 10,
-    // broadcast fence for the per-round domain state (domainClocks /
-    // seenSitemaps / quotas — all pld- or sitemap-cardinality frames):
+    // broadcast fence for the per-round domain state (domain clocks and
+    // scores / seenSitemaps — pld- or sitemap-cardinality frames):
     // they ride broadcast joins because domain cardinality is normally
     // millions at most, but at an extreme (100 M+ PLDs) a per-round
     // broadcast is itself the bottleneck. Past this row count the round
     // joins drop their broadcast hint and plan as partitioned joins —
     // the same fence discipline the stores' tombstone anti-join uses
     // (StoreProtocol's size switch). Cardinality is re-checked every
-    // `compactEvery` rounds (one amortized count, not a per-round action)
+    // `compactEvery` rounds (the domain count rides the state fold; the
+    // sitemap count is one amortized action, not a per-round one)
     broadcastStateMaxRows: Long = 10000000L,
     // URL-shape quality gate at frontier-insert time (the RefinedWeb/C4
     // URL-filtering slot, operators.UrlQuality): trap-shaped URLs (deep
@@ -159,10 +161,12 @@ final case class CrawlResult(
   * become a driver-side micro-batch recurrence over a persisted frontier
   * table. Each round:
   *
-  *   frontier ── schedule (per-PLD + global top-K) ── robots gate
-  *     ── fetch (mapPartitions, pluggable Fetcher) ── parse
+  *   frontier ── schedule (per-PLD + global top-K)
+  *     ── seam pass: robots gate → politeness rank → fetch → parse, one
+  *        task per pld partition (the reference's chained operators)
   *     ── derive {statusUpdates, outlinks, sitemapUrls}
   *     ── clean new URLs ── merge back into the frontier (UrlStateMerger)
+  *     ── fold the per-domain state (politeness clock + recent scores)
   *
   * Scale notes: the per-round working set is bounded by `maxQueueSize`
   * regardless of frontier size; the frontier itself only ever passes
@@ -197,6 +201,24 @@ final case class RobotsVerdict(
     verdict: String, // ALLOWED | BLOCKED
     crawlDelay: Long, sitemaps: Seq[String])
 
+/** One candidate's row out of a round's seam pass. `stage` names where it
+  * left the pass: "robots" (SKIPPED_BLOCKED / SKIPPED_DEFERRED),
+  * "politeness" (SKIPPED_CRAWLDELAY), "allowed" (cleared, waiting for a
+  * caller-supplied fetch stage) or "fetch" (the fetch outcome; `parse` is
+  * "ok" or "failed" for a page that went through the parser, else "").
+  * `sitemaps` are the robots.txt declarations of the URL's host;
+  * `outlinks` are the page's top `maxOutlinksPerPage` (url, score) links.
+  */
+final case class SeamRow(
+    url: String, pld: String, score: Float, stage: String, status: String,
+    crawlDelay: Long, sitemaps: Seq[String],
+    content: Array[Byte] = Array.emptyByteArray, contentType: String = "",
+    redirectedTo: String = "", headers: Map[String, Seq[String]] = Map.empty,
+    fetchedAtMs: Long = 0L, parse: String = "", title: String = "",
+    text: String = "", language: String = "",
+    parsedMeta: Map[String, String] = Map.empty,
+    outlinks: Seq[(String, Float)] = Seq.empty)
+
 object CrawlTopology {
 
   /** Normalize/validate raw URLs into UNFETCHED frontier rows
@@ -221,6 +243,127 @@ object CrawlTopology {
       .map { case (u, s) =>
         CrawlStateUrl(u, UrlFunctions.extractPld(u), FS.UNFETCHED, now, s, 0L)
       }
+  }
+
+  /** (score, url) best first: score descending, then url — the order of
+    * the schedule's per-domain rank, the politeness rank and the outlink
+    * top-K.
+    */
+  private val bestFirst: Ordering[(Float, String)] =
+    Ordering.Tuple2(Ordering.Float.TotalOrdering, Ordering.String)
+      .on[(Float, String)] { case (score, url) => (-score, url) }
+
+  /** Robots gate (CheckUrlWithRobotsFunction) plus the in-round crawl-delay
+    * rank over one seam task's candidates. The seam partitions by pld, so
+    * every candidate of a pld is in the task and the rank needs no window:
+    * a domain with a positive delay fetches only its best URL this round;
+    * its other allowed URLs stay UNFETCHED and the domain clock blocks the
+    * following rounds. Returns the rows that leave the pass here and the
+    * verdicts cleared to fetch now.
+    */
+  private def gate(it: Iterator[Candidate], robots: Fetcher, scope: String,
+      cfg: CrawlConfig): (Seq[SeamRow], Seq[RobotsVerdict]) = {
+    // executor-singleton TTL cache: rules survive across rounds and tasks
+    // on the same executor (CheckUrlWithRobotsFunction TTLs), namespaced
+    // per crawl run so crawls in one JVM never see each other's rules.
+    // The drain is pooled (reference: 10 robots threads) — the cache's
+    // single-flight guard keeps a burst of same-host misses to ONE fetch.
+    val verdicts = graft.util.Pooled.unordered(
+        it, cfg.robotsThreads, name = "robots") { c =>
+      val rules = RobotsCache.rulesFor(
+        UrlFunctions.robotsUrl(c.url), robots, scope = scope)
+      if (!rules.isAllowed(UrlFunctions.robotsPath(c.url)))
+        // unreachable robots (5xx/exception) DEFERS the visit — retryable
+        // on the error TTL — instead of blocking it
+        RobotsVerdict(c.url, c.pld, c.score,
+          if (rules.deferVisits) "DEFERRED" else "BLOCKED", 0L, rules.sitemaps)
+      else
+        RobotsVerdict(c.url, c.pld, c.score, "ALLOWED",
+          cfg.forceCrawlDelayMs.getOrElse(
+            rules.crawlDelayMs.getOrElse(cfg.defaultCrawlDelayMs)), rules.sitemaps)
+    }.toVector
+    val (allowed, refused) = verdicts.partition(_.verdict == "ALLOWED")
+    val (cleared, held) = allowed.groupBy(_.pld).values.toSeq
+      .flatMap(_.sortBy(v => (v.score, v.url))(bestFirst).zipWithIndex)
+      .partition { case (v, rank) => rank == 0 || v.crawlDelay <= 0 }
+    def row(v: RobotsVerdict, stage: String, status: String) =
+      SeamRow(v.url, v.pld, v.score, stage, status, v.crawlDelay, v.sitemaps)
+    (refused.map(v => row(v, "robots",
+        if (v.verdict == "DEFERRED") FS.SKIPPED_DEFERRED else FS.SKIPPED_BLOCKED)) ++
+      held.map { case (v, _) => row(v, "politeness", FS.SKIPPED_CRAWLDELAY) },
+      cleared.map(_._1))
+  }
+
+  /** Page fetch (FetchUrlsFunction) of one robots-cleared URL; redirects
+    * surface as HTTP_MOVED with the target re-entering the loop as a new
+    * URL.
+    */
+  private def fetchOne(
+      pf: Fetcher, v: RobotsVerdict, stampWall: Boolean): FetchOutcome = {
+    val page = Fetcher.safeFetch(pf, v.url)
+    val status = FS.fromHttpStatus(page.statusCode)
+    // raw bytes when the fetcher has them; text fixtures are encoded with
+    // the declared charset (strict, UTF-8 + contentType rewrite on
+    // unrepresentable chars) so parse's decode reproduces the original
+    // text exactly. The DECLARED type for text encoding is the
+    // Content-Type header when present (headers outrank the contentType
+    // field, reference BasePageParser.java:62-91)
+    val declaredCt = UrlFunctions
+      .headerFirst(page.headers, "Content-Type")
+      .getOrElse(page.contentType)
+    val (body, ct) =
+      if (status != FS.FETCHED) (Array.emptyByteArray, page.contentType)
+      else if (page.bytes != null) (page.bytes, page.contentType)
+      else UrlFunctions.encodeForFetch(page.content, declaredCt)
+    // if the encode fallback re-labeled the charset, the header copy must
+    // agree — parse resolves headers first
+    val headers =
+      if (status == FS.FETCHED && page.bytes == null)
+        page.headers.map { case (k, vs) =>
+          if (k.equalsIgnoreCase("Content-Type")) k -> Seq(ct)
+          else k -> vs
+        }
+      else page.headers
+    FetchOutcome(v.url, v.pld, status, v.score, v.crawlDelay,
+      body, ct, page.redirectedTo.getOrElse(""), headers,
+      // completion stamp AFTER the fetch returned: the server was hit no
+      // later than this, so clock-from-here spaces real hits by >=
+      // crawlDelay (wall mode only — logical crawls stay deterministic)
+      fetchedAtMs = if (stampWall) System.currentTimeMillis() else 0L)
+  }
+
+  /** Parse stage (ParseFunction) of one fetch outcome, as its seam row.
+    * Fetched HTML parses under the watchdog budget (ParserPolicy.java
+    * :14-18 — one adversarial page must not pin an executor core; a
+    * timeout is journaled ERROR_PARSE) and keeps its top
+    * `maxOutlinksPerPage` outlinks by score (ParseFunction.java:104-126).
+    */
+  private def parseOne(
+      f: FetchOutcome, sitemaps: Seq[String], cfg: CrawlConfig): SeamRow = {
+    val row = SeamRow(f.url, f.pld, f.score, "fetch", f.status, f.crawlDelay,
+      sitemaps, f.content, f.contentType, f.redirectedTo, f.headers,
+      f.fetchedAtMs)
+    val declaredCt = UrlFunctions.headerFirst(f.headers, "Content-Type")
+      .getOrElse(f.contentType)
+    if (f.status != FS.FETCHED || !declaredCt.contains("html")) row
+    else {
+      // charset resolution happens HERE, not at fetch (reference
+      // BasePageParser.java:62-63): the frontier pipeline stays
+      // byte-faithful and only the parser commits to a decoding —
+      // response headers outrank the contentType field
+      val html = new String(f.content,
+        UrlFunctions.charsetFromHeaders(f.headers, f.contentType))
+      HtmlParser.parseWithBudget(f.url, html, f.score, cfg.parseBudgetMs) match {
+        // per-page language detection + meta map travel with the parsed
+        // record (reference TikaCallable.java:167, ParsedUrl.java:6-69)
+        case Some(p) => row.copy(parse = "ok", title = p.title,
+          text = p.text, language = graft.operators.TextOps.predictLang(p.text),
+          parsedMeta = p.meta,
+          outlinks = p.outlinks.map(o => (o.url, o.score))
+            .sortBy(o => (o._2, o._1))(bestFirst).take(cfg.maxOutlinksPerPage))
+        case None => row.copy(parse = "failed")
+      }
+    }
   }
 
   def run(
@@ -340,16 +483,20 @@ object CrawlTopology {
     // (O(store) rows in the seed stage on every restart)
     journal(0, "seed", seedRows.select(col("url"), col("status")))
 
-    // page-score history feeding the focused-crawl feedback loop (the
-    // reference's DomainScore iteration, CrawlTopologyBuilder.java:419-423)
-    var scoreHistory: DataFrame = Seq.empty[(String, Float, Int)]
-      .toDF("pld", "pageScore", "scoreRound")
-
-    // per-domain politeness clocks (FetchUrlsFunction's domainKey ->
-    // nextFetchTime map): a domain whose robots crawl-delay is longer than
-    // a round tick stays off the schedule until its clock expires
-    var domainClocks: DataFrame = Seq.empty[(String, Long)]
-      .toDF("pld", "nextAllowed")
+    // per-domain round state, ONE pld-keyed frame folded once per round:
+    // the politeness clock (FetchUrlsFunction's domainKey -> nextFetchTime
+    // map — a domain whose crawl delay outlasts a round tick stays off the
+    // schedule until `nextAllowed`) and the focused-crawl feedback (the
+    // reference's DomainScore iteration, CrawlTopologyBuilder.java
+    // :419-423: the newest `scoreWindow` page scores, their mean `pldAvg`)
+    var domainState: DataFrame = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL("pld STRING, " +
+        "nextAllowed BIGINT, scores ARRAY<STRUCT<scoreRound: INT, " +
+        "pageScore: FLOAT>>, pldAvg DOUBLE"))
+    // observed on each fold: the mean pldAvg of the scored domains (the
+    // quota's global reference) and the domain count (broadcast fence)
+    var (globalAvg, domainRows) = (0.0, 0L)
 
     // sitemaps fetched in ANY prior round (reference: sitemap state in the
     // UrlDB; without it an active domain's sitemap is refetched every
@@ -378,35 +525,6 @@ object CrawlTopology {
       val now =
         if (cfg.wallClockRounds) System.currentTimeMillis()
         else round * cfg.roundTickMs
-
-      // --- domain quotas: moving average of the last `scoreWindow` page
-      // scores per PLD (G1), scaled against the global mean into a fetch
-      // quota — score-proportional scheduling, clamp [1, boost x base]
-      val quotas: Option[DataFrame] =
-        if (!cfg.scoreAdaptive) None
-        else {
-          val recency = Window.partitionBy(col("pld"))
-            .orderBy(col("scoreRound").desc, col("pageScore").desc)
-          val pldAvg = scoreHistory
-            .withColumn("sr", row_number().over(recency))
-            .filter(col("sr") <= cfg.scoreWindow)
-            .groupBy(col("pld"))
-            .agg(avg(col("pageScore")).as("pldAvg"))
-          // global mean as a broadcast 1-row aggregate, NOT an empty-frame
-          // window: Window.partitionBy() funnels every pld row through a
-          // single partition (WindowExec warns), which at web scale makes
-          // the quota step a one-core bottleneck
-          val withGlobal = pldAvg.crossJoin(
-            broadcast(pldAvg.agg(avg(col("pldAvg")).as("gavg"))))
-          Some(withGlobal.select(
-            col("pld"),
-            greatest(lit(1), least(
-              lit(cfg.maxQuotaBoost * cfg.maxUrlsPerDomainPerRound),
-              org.apache.spark.sql.functions.round(
-                lit(cfg.maxUrlsPerDomainPerRound) *
-                  col("pldAvg") / greatest(col("gavg"), lit(0.01)))
-                .cast("int"))).as("quota")))
-        }
 
       // --- schedule: FetchQueue semantics (per-domain fairness + global
       // top-K by score with min-score gate; UrlDBFunction/FetchQueue)
@@ -442,35 +560,35 @@ object CrawlTopology {
         refetch.fold(base)(r => base.unionByName(r))
           .filter(col("score") >= cfg.minFetchScore)
       }
-      val eligible = rawEligible
-        .join(maybeBroadcast(domainClocks), Seq("pld"), "left")
-        .filter(coalesce(col("nextAllowed"), lit(0L)) <= now)
-        .drop("nextAllowed")
-      val perDomain = Window
-        .partitionBy(col("pld"))
-        .orderBy(col("score").desc, col("url").asc)
-      val withQuota = quotas match {
-        case Some(q) => eligible
-          .join(maybeBroadcast(q), Seq("pld"), "left")
-          .withColumn("quota",
-            coalesce(col("quota"), lit(cfg.maxUrlsPerDomainPerRound)))
-        case None => eligible
-          .withColumn("quota", lit(cfg.maxUrlsPerDomainPerRound))
-      }
+      // focused crawling: a domain's fetch quota is its moving-average
+      // page score against the global mean (G1) — score-proportional
+      // scheduling, clamp [1, boost x base]; unscored domains get base
+      val baseQuota = cfg.maxUrlsPerDomainPerRound
+      val quota =
+        if (!cfg.scoreAdaptive) lit(baseQuota)
+        else when(col("pldAvg").isNotNull, greatest(lit(1), least(
+            lit(cfg.maxQuotaBoost * baseQuota),
+            org.apache.spark.sql.functions.round(lit(baseQuota) *
+              col("pldAvg") / lit(math.max(globalAvg, 0.01))).cast("int"))))
+          .otherwise(lit(baseQuota))
+      val perDomain =
+        Window.partitionBy(col("pld")).orderBy(col("score").desc, col("url").asc)
       // G5 gauge via the observe() API: queue depth rides the checkpoint
       // action for free — no second pass over candidates
       val queueObs = org.apache.spark.sql.Observation(s"queue_r$round")
-      val candidates = withQuota
+      val candidates = rawEligible
+        .join(maybeBroadcast(domainState.select("pld", "nextAllowed", "pldAvg")),
+          Seq("pld"), "left")
+        .filter(coalesce(col("nextAllowed"), lit(0L)) <= now)
         .withColumn("rn", row_number().over(perDomain))
-        .filter(col("rn") <= col("quota"))
+        .filter(col("rn") <= quota)
         .orderBy(col("score").desc, col("url").asc)
         .limit(cfg.maxQueueSize)
         .select(col("url"), col("pld"), col("score"))
         .observe(queueObs, count(lit(1)).as("n"))
         .as[Candidate]
         .localCheckpoint(true)
-      val queueDepth =
-        queueObs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+      val queueDepth = Observed.long(queueObs, "n")
       gauges += ((round, "urls_in_queue", queueDepth))
 
       // emptiness rides the queue observation — a separate isEmpty action
@@ -483,76 +601,64 @@ object CrawlTopology {
         if (rawEligible.isEmpty && cfg.recrawlIntervalMs.isEmpty)
           active = false
       } else {
-        // --- robots gate (CheckUrlWithRobotsFunction): per-partition rules
-        // cache so each robots.txt is fetched once per partition per round
-        val rf = robotsFetcher
-        val runScope = crawlRunId
-        // sitemap presence rides the verdicts checkpoint as an observed
-        // metric: the whole sitemap stage (distinct + anti-join + fetch
-        // pass + its checkpoint) is skipped when this round surfaced no
-        // sitemap declarations at all — the common case, and 2-3 of the
-        // ~10 per-round driver actions the r16 bench attributed to fixed
-        // overhead
-        val smObs = org.apache.spark.sql.Observation()
-        val verdicts = candidates
+        // --- seam pass: robots gate → politeness rank → fetch → parse in
+        // ONE task per pld partition (seamParts of them, see above), the
+        // reference's chained operators. The fetch drain is pooled
+        // (FetchUrlsFunction's thread pool): task wall ≈ Σ latencies /
+        // fetchThreads. Politeness is enforced before it — the schedule's
+        // per-domain cap, then the gate's crawl-delay rank — so the pool
+        // never hits one host harder than the schedule allows.
+        def pass(fetch: Boolean): Dataset[SeamRow] = candidates
           .repartition(seamParts, col("pld"))
           .mapPartitions { it =>
-            // executor-singleton TTL cache: rules survive across rounds and
-            // tasks on the same executor (CheckUrlWithRobotsFunction TTLs),
-            // namespaced per crawl run so concurrent/sequential crawls in
-            // one JVM never see each other's rules. The drain is pooled
-            // (reference: 10 robots threads) — the cache's single-flight
-            // guard keeps a burst of same-host misses to ONE fetch.
-            graft.util.Pooled.unordered(
-                it, cfg.robotsThreads, name = "robots") { c =>
-              val rUrl = UrlFunctions.robotsUrl(c.url)
-              val rules = RobotsCache.rulesFor(rUrl, rf, scope = runScope)
-              val path = UrlFunctions.robotsPath(c.url)
-              if (!rules.isAllowed(path))
-                // unreachable robots (5xx/exception) DEFERS the visit —
-                // retryable on the error TTL — instead of blocking it
-                RobotsVerdict(c.url, c.pld, c.score,
-                  if (rules.deferVisits) "DEFERRED" else "BLOCKED",
-                  0L, rules.sitemaps)
-              else
-                RobotsVerdict(c.url, c.pld, c.score, "ALLOWED",
-                  cfg.forceCrawlDelayMs.getOrElse(
-                    rules.crawlDelayMs.getOrElse(cfg.defaultCrawlDelayMs)),
-                  rules.sitemaps)
-            }
+            val (held, cleared) = gate(it, robotsFetcher, crawlRunId, cfg)
+            held.iterator ++ (
+              if (!fetch) cleared.iterator.map(v => SeamRow(v.url, v.pld,
+                v.score, "allowed", "", v.crawlDelay, v.sitemaps))
+              else graft.util.Pooled.unordered(
+                  cleared.iterator, cfg.fetchThreads, name = "fetch") { v =>
+                  (fetchOne(pageFetcher, v, cfg.wallClockRounds), v.sitemaps)
+                }.map { case (f, sm) => parseOne(f, sm, cfg) })
           }
-          .observe(smObs, sum(size(col("sitemaps"))).as("nsm"))
+        val seamObs = org.apache.spark.sql.Observation()
+        val seam = (fetchStage match {
+          case None => pass(fetch = true)
+          case Some(stage) =>
+            // a caller's fetch stage is a Dataset function: it reads the
+            // gate's pinned output, and its outcomes parse in a narrow
+            // map inside the seam checkpoint's job
+            val gated = pass(fetch = false).localCheckpoint(true)
+            gated.union(stage(gated.filter(_.stage == "allowed").map(v =>
+                RobotsVerdict(v.url, v.pld, v.score, "ALLOWED", v.crawlDelay,
+                  v.sitemaps)))
+              .map(parseOne(_, Seq.empty, cfg)))
+        }).withColumn("task", spark_partition_id())
+          // the sitemap declarations and the seam's fetching task count
+          // ride the ONE checkpoint as observed metrics; every later
+          // frame of the round derives from it
+          .observe(seamObs, sum(size(col("sitemaps"))).as("nsm"), size(
+            collect_set(when(col("stage") === "fetch", col("task")))).as("tasks"))
           .localCheckpoint(true)
-        val sitemapCount = smObs.get.get("nsm")
-          .collect { case n: Long => n }.getOrElse(0L)
-
-        val blocked = verdicts
-          .filter(v => v.verdict == "BLOCKED" || v.verdict == "DEFERRED")
-          .map(v =>
-            if (v.verdict == "DEFERRED")
-              CrawlStateUrl(v.url, v.pld, FS.SKIPPED_DEFERRED, now,
-                v.score, now + cfg.deferRetryMs)
-            else
-              CrawlStateUrl(v.url, v.pld, FS.SKIPPED_BLOCKED, now,
-                v.score, now + cfg.deferBlockedMs))
-          .toDF()
-        journal(round, "robots", blocked.select(col("url"), col("status")))
+        val sitemapCount = Observed.long(seamObs, "nsm")
+        // seam-shape gauge: the tasks that fetched — at 1 the crawl
+        // concurrency has collapsed to a single pool (the AQE-coalescing
+        // failure LiveCrawlBench exists to catch)
+        gauges += ((round, "fetch_tasks", Observed.long(seamObs, "tasks")))
+        def stageRows(stage: String) = seam.filter(col("stage") === stage)
+        journal(round, "robots", stageRows("robots").select(col("url"), col("status")))
 
         // --- sitemap discovery: fetch+parse each sitemap ONCE per crawl —
         // the anti-join against seenSitemaps keeps an active domain's
         // sitemap from being refetched every round for the crawl's life.
-        // The stage only RUNS when the robots pass surfaced a sitemap
+        // The stage only RUNS when the robots gate surfaced a sitemap
         // declaration (sitemapCount above) — skipped, it contributes no
         // driver actions to the round
-        val pf = pageFetcher
-        val smf = sitemapFetcher.getOrElse(pageFetcher)
         val sitemapLinks: Dataset[(String, Float)] =
           if (sitemapCount == 0L) spark.emptyDataset[(String, Float)]
           else {
-            val sitemapFetches = verdicts
-              .flatMap(v => v.sitemaps.map(s => (v.pld, s)))
+            val sitemapFetches = seam
+              .select(col("pld"), explode(col("sitemaps")).as("sitemapUrl"))
               .distinct()
-              .toDF("pld", "sitemapUrl")
               .join(maybeBroadcast(seenSitemaps), Seq("sitemapUrl"), "left_anti")
               .select(col("pld"), col("sitemapUrl"))
               .repartition(seamParts, col("sitemapUrl"))
@@ -563,7 +669,8 @@ object CrawlTopology {
                 graft.util.Pooled.unordered(
                     it, cfg.fetchThreads, name = "sitemap") {
                   case (_, sitemapUrl) =>
-                    val page = Fetcher.safeFetch(smf, sitemapUrl)
+                    val page = Fetcher.safeFetch(
+                      sitemapFetcher.getOrElse(pageFetcher), sitemapUrl)
                     val links =
                       if (page.statusCode == 200)
                         HtmlParser.parseSitemap(page.content)
@@ -593,89 +700,10 @@ object CrawlTopology {
             sitemapFetches.flatMap(_._3.map(u => (u, 1.0f)))
           }
 
-        // --- fetch (FetchUrlsFunction): politeness is already enforced by
-        // the per-domain schedule cap; redirects surface as HTTP_MOVED with
-        // the target re-entering the loop as a new URL
-        val stampWall = cfg.wallClockRounds
-        val liveFetch: Dataset[RobotsVerdict] => Dataset[FetchOutcome] =
-          allowed => allowed
-            // slot-count partitions regardless of byte size (see
-            // seamParts): fetch wall ≈ Σ latencies / (tasks × threads).
-            // Keyed by URL, NOT pld: the in-round ranking window just
-            // hash-partitioned by pld, so a pld-keyed exchange here is
-            // optimizer-removed as redundant — and the window's own
-            // ENSURE_REQUIREMENTS shuffle then coalesces to ONE task
-            // under AQE (PartitionProbe pins all three shapes). URL also
-            // spreads a quota-boosted domain's URLs across tasks.
-            .repartition(seamParts, col("url"))
-            .as[RobotsVerdict]
-            .mapPartitions { it =>
-            // pooled unordered drain (FetchUrlsFunction's thread pool):
-            // per-partition wall ≈ Σ latencies / fetchThreads. Politeness
-            // is already enforced upstream — a crawl-delayed domain sends
-            // one URL per round into this seam, so concurrency here never
-            // hits one host harder than the schedule allows.
-            graft.util.Pooled.unordered(
-                it, cfg.fetchThreads, name = "fetch") { v =>
-              val page = Fetcher.safeFetch(pf, v.url)
-              val status = FS.fromHttpStatus(page.statusCode)
-              // raw bytes when the fetcher has them; text fixtures are
-              // encoded with the declared charset (strict, UTF-8 +
-              // contentType rewrite on unrepresentable chars) so parse's
-              // decode reproduces the original text exactly
-              // the DECLARED type for text encoding is the Content-Type
-              // header when present (headers outrank the contentType
-              // field, reference BasePageParser.java:62-91)
-              val declaredCt = UrlFunctions
-                .headerFirst(page.headers, "Content-Type")
-                .getOrElse(page.contentType)
-              val (body, ct) =
-                if (status != FS.FETCHED) (Array.emptyByteArray, page.contentType)
-                else if (page.bytes != null) (page.bytes, page.contentType)
-                else UrlFunctions.encodeForFetch(page.content, declaredCt)
-              // if the encode fallback re-labeled the charset, the header
-              // copy must agree — parse resolves headers first
-              val headers =
-                if (status == FS.FETCHED && page.bytes == null)
-                  page.headers.map { case (k, vs) =>
-                    if (k.equalsIgnoreCase("Content-Type")) k -> Seq(ct)
-                    else k -> vs
-                  }
-                else page.headers
-              FetchOutcome(v.url, v.pld, status, v.score, v.crawlDelay,
-                body, ct, page.redirectedTo.getOrElse(""), headers,
-                // completion stamp AFTER the fetch returned: the server
-                // was hit no later than this, so clock-from-here spaces
-                // real hits by >= crawlDelay (wall mode only — logical
-                // crawls must stay deterministic)
-                fetchedAtMs =
-                  if (stampWall) System.currentTimeMillis() else 0L)
-            }
-          }
-        // in-round crawl-delay enforcement: a domain with a positive delay
-        // fetches once per round; surplus allowed URLs stay UNFETCHED in
-        // the frontier and the domain clock blocks following rounds
-        val aw = Window.partitionBy(col("pld"))
-          .orderBy(col("score").desc, col("url").asc)
-        val allowedRanked = verdicts.filter(_.verdict == "ALLOWED").toDF()
-          .withColumn("arn", row_number().over(aw))
-        val deferred = allowedRanked
-          .filter(col("arn") > 1 && col("crawlDelay") > 0)
         journal(round, "politeness",
-          deferred.select(col("url"),
-            lit(FS.SKIPPED_CRAWLDELAY).as("status")))
-        val allowedNow = allowedRanked
-          .filter(col("arn") === 1 || col("crawlDelay") <= 0)
-          .drop("arn").as[RobotsVerdict]
-
-        val fetched = fetchStage.getOrElse(liveFetch)(allowedNow)
-          .localCheckpoint(true)
-        // seam-shape gauge: the fetch stage's TASK count — at 1 the crawl
-        // concurrency has collapsed to a single pool (the AQE-coalescing
-        // failure LiveCrawlBench exists to catch)
-        gauges += ((round, "fetch_tasks",
-          fetched.rdd.getNumPartitions.toLong))
-        journal(round, "fetch", fetched.toDF().select(col("url"), col("status")))
+          stageRows("politeness").select(col("url"), col("status")))
+        val fetched = stageRows("fetch")
+        journal(round, "fetch", fetched.select(col("url"), col("status")))
 
         // content tap: every fetch ATTEMPT (with response headers) flows
         // to the configured sink — WARC archiving, content parquet,
@@ -684,32 +712,26 @@ object CrawlTopology {
         // redirects and errors instead of flattening them to 404 — the
         // reference CommonCrawlFetcher replays archived status codes
         cfg.contentSink.foreach { sink =>
-          sink(fetched.toDF()
-            .select(col("url"),
-              ArchiveFetch.fetchStatusToHttpStatusCol(col("status"))
-                .as("statusCode"),
-              col("contentType"), col("headers"), col("content"),
-              lit(now).as("fetchTimeMs"),
-              col("redirectedTo")))
+          sink(fetched.select(col("url"),
+            ArchiveFetch.fetchStatusToHttpStatusCol(col("status")).as("statusCode"),
+            col("contentType"), col("headers"), col("content"),
+            lit(now).as("fetchTimeMs"), col("redirectedTo")))
         }
 
         // fold this round's captures into the change history (adaptive
         // recrawl): body hash per successful fetch, newest captureWindow
         // rows kept per URL so the fold is O(active URLs x window)
         if (cfg.adaptiveRecrawl.isDefined) {
-          val caps = fetched.toDF()
-            .filter(col("status") === FS.FETCHED)
+          val caps = fetched.filter(col("status") === FS.FETCHED)
             .select(col("url"), lit(now).as("ts"),
               xxhash64(col("content")).as("fp"),
               lit(round.toLong).as("capId"))
-          val capRecency = Window.partitionBy(col("url"))
-            .orderBy(col("capId").desc)
-          // LAZY checkpoint (like every per-round state fold below): the
-          // lineage truncates at first materialization — inside the NEXT
-          // round's consuming job — instead of costing a separate driver
-          // action now. The fold derives only from eagerly-checkpointed
-          // parents, so a recompute before the cache lands is
-          // deterministic.
+          val capRecency = Window.partitionBy(col("url")).orderBy(col("capId").desc)
+          // LAZY checkpoint: the lineage truncates at first
+          // materialization — inside the NEXT round's consuming job —
+          // instead of costing a separate driver action now. The fold
+          // derives only from eagerly-checkpointed parents, so a
+          // recompute before the cache lands is deterministic.
           captureHistory = captureHistory.unionByName(caps)
             .withColumn("__cr", row_number().over(capRecency))
             .filter(col("__cr") <= cfg.captureWindow)
@@ -717,75 +739,10 @@ object CrawlTopology {
             .localCheckpoint(false)
         }
 
-        // advance the politeness clocks for delayed domains — from the
-        // latest actual fetch completion when wall-paced (fetchedAtMs is
-        // 0 on logical crawls and archive stages, so greatest() degrades
-        // to the round snapshot there)
-        val newClocks = fetched.toDF()
-          .filter(col("crawlDelay") > 0)
-          .groupBy(col("pld"))
-          .agg((greatest(max(col("fetchedAtMs")), lit(now)) +
-            max(col("crawlDelay"))).as("nextAllowed"))
-        domainClocks = domainClocks.unionByName(newClocks)
-          .groupBy(col("pld"))
-          .agg(max(col("nextAllowed")).as("nextAllowed"))
-          .localCheckpoint(false)
-
-        // per-URL re-arm time: a fetch row's crawlDelay already carries
-        // the forced > robots > default precedence (resolved at the
-        // robots gate above), so when a force is configured it is used
-        // AS-IS — max-ing with the default would silently override a
-        // forced delay smaller than defaultCrawlDelayMs (ADVICE r16).
-        // Without a force, the max() floors rows whose delay arrived 0
-        // from non-robots paths at the configured default.
-        val forced = cfg.forceCrawlDelayMs.isDefined
-        val statusUpdates = fetched
-          .map(f => CrawlStateUrl(f.url, f.pld, f.status, now, f.score,
-            now + (if (forced) f.crawlDelay
-                   else math.max(f.crawlDelay, cfg.defaultCrawlDelayMs))))
-          .toDF()
-
-        // --- parse (ParseFunction): title/text/outlinks; outlink top-K per
-        // page by score (ParseFunction.java:104-126). Each parse runs under
-        // the watchdog budget (ParserPolicy.java:14-18) — one adversarial
-        // page must not pin an executor core; timeouts surface as
-        // ERROR_PARSE in the journal instead of hanging the stage
-        val parseBudget = cfg.parseBudgetMs
-        val parseAttempts = fetched
-          .filter(f => f.status == FS.FETCHED &&
-            UrlFunctions.headerFirst(f.headers, "Content-Type")
-              .getOrElse(f.contentType).contains("html"))
-          .map { f =>
-            // charset resolution happens HERE, not at fetch (reference
-            // BasePageParser.java:62-63): the frontier pipeline stays
-            // byte-faithful and only the parser commits to a decoding —
-            // response headers outrank the contentType field
-            val html = new String(f.content,
-              UrlFunctions.charsetFromHeaders(f.headers, f.contentType))
-            HtmlParser.parseWithBudget(f.url, html, f.score, parseBudget) match {
-              case Some(p) =>
-                // per-page language detection + meta map travel with the
-                // parsed record (reference TikaCallable.java:167,
-                // ParsedUrl.java:6-69)
-                (f.url, f.pld, p.title, p.text, f.score,
-                  graft.operators.TextOps.predictLang(p.text), p.meta,
-                  p.outlinks.map(o =>
-                    (o.url, o.anchorText, o.relAttributes, o.score)),
-                  false)
-              case None =>
-                (f.url, f.pld, "", "", f.score,
-                  "", Map.empty[String, String],
-                  Seq.empty[(String, String, String, Float)], true)
-            }
-          }
-          .toDF("url", "pld", "title", "text", "score",
-            "language", "parsedMeta", "outlinks", "parseFailed")
-          .localCheckpoint(true)
         journal(round, "parse_failed",
-          parseAttempts.filter(col("parseFailed"))
+          fetched.filter(col("parse") === "failed")
             .select(col("url"), lit(FS.ERROR_PARSE).as("status")))
-        val parsedPages = parseAttempts.filter(!col("parseFailed"))
-
+        val parsedPages = fetched.filter(col("parse") === "ok")
         val parsedOut = parsedPages
           .filter(col("score") > 0.0f)
           .select(col("url"), col("pld"), col("title"), col("text"),
@@ -799,50 +756,62 @@ object CrawlTopology {
         journal(round, "parse",
           parsedOut.select(col("url"), lit(FS.FETCHED).as("status")))
 
-        // feed the score loop (ParseFunction's score side output :102).
-        // Prune to the newest `scoreWindow` rows per pld on every fold:
-        // only those are ever read by the quota window, and an unpruned
-        // history is O(total pages crawled) re-checkpointed each round
-        if (cfg.scoreAdaptive) {
-          val recency = Window.partitionBy(col("pld"))
-            .orderBy(col("scoreRound").desc, col("pageScore").desc)
-          scoreHistory = scoreHistory
-            .unionByName(parsedOut.select(
-              col("pld"),
-              col("score").cast("float").as("pageScore"),
-              lit(round).as("scoreRound")))
-            .withColumn("keepRn", row_number().over(recency))
-            .filter(col("keepRn") <= cfg.scoreWindow)
-            .drop("keepRn")
-            .localCheckpoint(false)
-        }
-
-        val outlinkWindow = Window
-          .partitionBy(col("srcUrl"))
-          .orderBy(col("linkScore").desc, col("link").asc)
-        val outlinks = parsedPages
-          .select(col("url").as("srcUrl"),
-            explode_outer(col("outlinks")).as("o"))
-          .filter(col("o").isNotNull)
-          .select(col("srcUrl"), col("o._1").as("link"), col("o._4").as("linkScore"))
-          .withColumn("rn", row_number().over(outlinkWindow))
-          .filter(col("rn") <= cfg.maxOutlinksPerPage)
-          .select(col("link"), col("linkScore").cast("float"))
-          .as[(String, Float)]
-
-        val redirectTargets = fetched
-          .filter(f => f.redirectedTo.nonEmpty)
-          .map(f => (f.redirectedTo, f.score))
+        // --- domain-state fold: advance the politeness clocks of delayed
+        // domains — from the latest actual fetch completion when
+        // wall-paced (fetchedAtMs is 0 on logical crawls and archive
+        // stages, so greatest() degrades to the round snapshot there) —
+        // and keep each domain's newest `scoreWindow` page scores
+        // (ParseFunction's score side output :102), so the state is
+        // O(domains x window), never O(pages crawled)
+        val newScores =
+          if (!cfg.scoreAdaptive) Seq.empty
+          else Seq(parsedOut.select(col("pld"), array(struct(
+            lit(round).as("scoreRound"),
+            col("score").as("pageScore"))).as("scores")))
+        val stateObs = org.apache.spark.sql.Observation()
+        domainState = (fetched.filter(col("crawlDelay") > 0)
+            .select(col("pld"), col("fetchedAtMs"), col("crawlDelay")) +: newScores)
+          .foldLeft(domainState)(_.unionByName(_, allowMissingColumns = true))
+          .groupBy(col("pld"))
+          .agg(greatest(max(col("nextAllowed")),
+              greatest(max(col("fetchedAtMs")), lit(now)) +
+                max(col("crawlDelay"))).as("nextAllowed"),
+            slice(sort_array(flatten(collect_list(col("scores"))), asc = false),
+              1, cfg.scoreWindow).as("scores"))
+          .withColumn("pldAvg", when(size(col("scores")) > 0,
+            aggregate(col("scores"), lit(0.0), (acc, s) => acc + s("pageScore")) /
+              size(col("scores"))))
+          .observe(stateObs, avg(col("pldAvg")).as("gavg"), count(lit(1)).as("n"))
+          .localCheckpoint(true)
+        globalAvg = Observed.number(stateObs, "gavg").doubleValue()
+        domainRows = Observed.long(stateObs, "n")
 
         // --- close the loop: clean new URLs, merge everything
         // (the 4-way union at CrawlTopologyBuilder.java:433-437)
-        val newUrls = shapeGate(round, cleanUrls(
-          spark,
+        val outlinks = parsedPages.select(explode(col("outlinks")).as("o"))
+          .select(col("o._1"), col("o._2")).as[(String, Float)]
+        val redirectTargets = fetched.filter(col("redirectedTo") =!= "")
+          .select(col("redirectedTo"), col("score")).as[(String, Float)]
+        val newUrls = shapeGate(round, cleanUrls(spark,
           outlinks.union(sitemapLinks).union(redirectTargets),
           now, cfg, lengthener).toDF())
 
-        frontier = commitFrontier(
-          blocked.unionByName(statusUpdates).unionByName(newUrls))
+        // per-URL re-arm time: a fetch row's crawlDelay already carries
+        // the forced > robots > default precedence (resolved at the gate),
+        // so a forced delay is used AS-IS — max-ing with the default would
+        // override a force below defaultCrawlDelayMs (ADVICE r16); without
+        // one, the max() floors delays that arrived 0 from non-robots
+        // paths. Refused rows re-arm after the defer or block interval.
+        val fetchDelay =
+          if (cfg.forceCrawlDelayMs.isDefined) col("crawlDelay")
+          else greatest(col("crawlDelay"), lit(cfg.defaultCrawlDelayMs))
+        val statusUpdates = seam.filter(col("stage").isin("robots", "fetch"))
+          .select(col("url"), col("pld"), col("status"),
+            lit(now).as("statusTime"), col("score"),
+            (lit(now) + when(col("stage") === "fetch", fetchDelay)
+              .when(col("status") === FS.SKIPPED_DEFERRED, lit(cfg.deferRetryMs))
+              .otherwise(lit(cfg.deferBlockedMs))).as("nextFetchTime"))
+        frontier = commitFrontier(statusUpdates.unionByName(newUrls))
         // a round that scheduled work is "activity" for idle-based
         // terminators (reference NoActivityCrawlTerminator); rounds that
         // only tick politeness clocks are not
@@ -852,12 +821,11 @@ object CrawlTopology {
       // compaction / score pruning / seen-sitemaps state exist to hold;
       // surfacing it as a gauge lets benches assert it directly
       gauges += ((round, "round_ms", (System.nanoTime() - roundT0) / 1000000))
-      // amortized fence re-check: one count per compactEvery rounds, and
-      // only while still broadcasting (past the fence there is nothing
-      // left to decide — domain state only grows)
+      // amortized fence re-check: one sitemap count per compactEvery
+      // rounds, and only while still broadcasting (past the fence there
+      // is nothing left to decide — domain state only grows)
       if (broadcastDomainState && round % math.max(1, cfg.compactEvery) == 0
-          && domainClocks.count() + seenSitemaps.count()
-            > cfg.broadcastStateMaxRows)
+          && domainRows + seenSitemaps.count() > cfg.broadcastStateMaxRows)
         broadcastDomainState = false
       gauges += ((round, "domain_state_broadcast",
         if (broadcastDomainState) 1L else 0L))

@@ -1,8 +1,12 @@
 package graft.crawl
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.UrlStateMerger
 
@@ -124,9 +128,33 @@ object FrontierStore {
       else {
         val paths = manifest.toSeq.sortBy(_._1)
           .map { case (b, tok) => bucketLoc(root, b, tok) }
-        Some(spark.read.parquet(paths: _*))
+        Some(readParquet(spark, paths))
       }
     }
+
+  /** Parquet read that runs no Spark job: the schema is the one Spark
+    * recorded in the first file's footer when it wrote the data (one
+    * driver-side footer read instead of a schema-inference job; it must
+    * come from the files — a store's `score` is float or decimal, see
+    * [[retire]]), and each scan takes at most Spark's parallel-listing
+    * threshold of dirs (past it Spark lists them in a job of its own;
+    * bucket dirs hold a file or two, so the driver lists them faster).
+    */
+  private def readParquet(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(dirs.head)
+    val recorded = dir.getFileSystem(conf).listStatus(dir)
+      .find(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try Option(r.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)) finally r.close()
+      }
+    val reader = recorded.fold(spark.read)(json =>
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
+    val perScan = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    dirs.grouped(math.max(1, perScan)).map(reader.parquet(_: _*)).reduce(_ union _)
+  }
 
   /** The journal columns every bucket version records a `_SKIP` sidecar
     * for at commit time: the two time axes the engine's scans band on
@@ -245,7 +273,7 @@ object FrontierStore {
       case None => updates
       case Some(tagged) =>
         if (currentAffected.isEmpty) tagged.drop("bucket")
-        else spark.read.parquet(currentAffected: _*)
+        else readParquet(spark, currentAffected)
           .unionByName(tagged.drop("bucket"))
     }
 
@@ -273,11 +301,13 @@ object FrontierStore {
       else affected.partition(written.contains)
     // a commit whose every affected bucket emptied wrote no data at all —
     // drop the hollow generation dir (only _SUCCESS inside) now. A fresh
-    // build with zero surviving rows commits nothing (an empty manifest
-    // on a fresh root would poison every subsequent read).
+    // build with zero surviving rows commits nothing, unless it folds WAL
+    // batches: then a bucket-less manifest records the watermark, or the
+    // fold's tombstone-only batches would be re-folded and never reclaimed
     if (present.isEmpty) {
       f.delete(new Path(genDir), true)
-      if (freshStore) return read(spark, root).getOrElse(updates.limit(0))
+      if (freshStore && walWatermark.forall(_ <= prevWalWm))
+        return read(spark, root).getOrElse(updates.limit(0))
     }
 
     // file-skipping sidecars for the NEW bucket dirs (metadata-only,
@@ -494,13 +524,15 @@ object FrontierStore {
     val stored = read(spark, root)
     val wal =
       if (pending.isEmpty) None
-      else Some(spark.read.parquet(pending.map(_._2.toString): _*))
+      else Some(readParquet(spark, pending.map(_._2.toString)))
     (stored, wal) match {
       case (None, None) => None
       case (Some(s), None) => Some(s)
       case (None, Some(w)) => Some(UrlStateMerger.mergeFrontier(w))
       case (Some(s), Some(w)) =>
-        val keys = w.select("url").distinct()
+        // no distinct: a duplicate build key changes neither join, and a
+        // dedup would add a shuffle stage to every crawl round's schedule
+        val keys = w.select("url")
         val touched = s.join(keys, Seq("url"), "left_semi")
           .unionByName(w.select(s.columns.map(col): _*))
         val untouched = s.join(keys, Seq("url"), "left_anti")
@@ -520,7 +552,7 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     if (pending.nonEmpty) {
-      val updates = spark.read.parquet(pending.map(_._2.toString): _*)
+      val updates = readParquet(spark, pending.map(_._2.toString))
       mergeInto(spark, root, updates, buckets,
         walWatermark = Some(pending.map(_._1).max))
     }
@@ -544,7 +576,7 @@ object FrontierStore {
         .select(pmod(xxhash64(lit(pld)), lit(buckets)).cast("int"))
         .head().getInt(0)
       manifest.get(b).map { tok =>
-        spark.read.parquet(bucketLoc(root, b, tok))
+        readParquet(spark, Seq(bucketLoc(root, b, tok)))
           .filter(col("pld") === pld)
       }
     }

@@ -161,11 +161,7 @@ object Components {
         col("__ca") =!= col("__cb"))
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true) // read once for touch-detection, once as edges
-    val nEff = obs.get.getOrElse("n", null) match {
-      case x: java.lang.Long => x.longValue()
-      case _                 => 0L
-    }
-    if (nEff == 0L) return labels
+    if (graft.util.Observed.long(obs, "n") == 0L) return labels
     val pairs = pl.select(col("pa"), col("pb"))
     // components whose membership can change = standing labels of the
     // effective pairs' endpoints (endpoints unknown to the standing set

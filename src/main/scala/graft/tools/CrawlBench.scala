@@ -58,7 +58,7 @@ object CrawlBench {
 
     // long-crawl flatness: a continuous (recrawl) crawl must hold a FLAT
     // per-round wall time — the invariant the journal/parsed compaction,
-    // scoreHistory pruning, and seen-sitemaps state exist to protect
+    // domain-score pruning, and seen-sitemaps state exist to protect
     // (unbounded union chains grow driver analysis O(rounds), VERDICT r2
     // "what's wrong" #2-#3). Compares late-crawl vs early-crawl means.
     val rounds = args.headOption.flatMap(_.toIntOption).getOrElse(200)

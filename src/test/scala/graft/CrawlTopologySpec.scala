@@ -181,6 +181,44 @@ class CrawlTopologySpec extends AnyFunSuite {
     assert(r.frontier.filter(col("url") === "http://mass.com/shared").count() == 0)
   }
 
+  test("round shape: a steady durable round stays within its job and SQL-execution ceilings") {
+    // three domains of 8-page chains, one crawl-delayed: every round
+    // fetches one page per domain and folds a politeness clock. The
+    // journal compaction (every compactEvery appends) stays out of it
+    val domains = Seq("shape-a.com", "shape-b.com", "shape-c.com")
+    val g = WebGraph(domains.flatMap(d => (0 to 8).map { i =>
+      (if (i == 0) d else s"$d/p$i") ->
+        (if (i == 8) Seq.empty[String] else Seq(s"$d/p${i + 1}"))
+    }): _*)
+    val robots = new MapRobotsFetcher(Map(
+      "http://shape-a.com/robots.txt" -> "User-agent: *\nCrawl-delay: 1\n"))
+    val sc = spark.sparkContext
+    val tags = new JobsByTag
+    val root = java.nio.file.Files.createTempDirectory("graft-shape").toString
+    sc.addSparkListener(tags)
+    try {
+      CrawlTopology.run(spark, domains.map(d => (d, 1.0f)),
+        new WebGraphFetcher(g), robots,
+        CrawlConfig(maxRounds = 100, frontierRoot = Some(root),
+          frontierCompactEvery = 3, compactEvery = 1000,
+          terminator = Some(new RoundTagger(8))))
+      org.apache.spark.TestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(tags)
+      sc.clearJobTags()
+    }
+    // rounds 2, 5 and 8 also fold the WAL into the bucketed store (the
+    // seed commit plus two rounds fill frontierCompactEvery = 3) and round
+    // 1 fetches robots.txt; in the steady rounds the schedule reads the
+    // store alone (3, 6) or the store plus one WAL batch (4, 7)
+    val shape = Seq(3, 4, 6, 7).map(r => r -> tags.counts(s"round-$r"))
+    val seen = shape.mkString("; ")
+    assert(shape.forall(_._2.outsideSql.get == 0),
+      s"jobs outside any SQL execution (schema inference?): $seen")
+    assert(shape.forall(_._2.jobs.get <= 10), s"job ceiling: $seen")
+    assert(shape.forall(_._2.sql.get <= 4), s"SQL-execution ceiling: $seen")
+  }
+
   test("parse stage stamps language and parsedMeta on every page (P1)") {
     // a German page with meta tags: language detection + the meta map must
     // travel into CrawlResult.parsed (reference TikaCallable.java:167,
@@ -427,5 +465,20 @@ final class AdaptiveFetcher(hot: Set[String]) extends graft.crawl.Fetcher {
       if (hot(url)) s"<html><body>version $n of this page</body></html>"
       else "<html><body>immutable content here</body></html>"
     graft.crawl.FetchedPage(200, body, "text/html")
+  }
+}
+
+/** Tags the Spark jobs and SQL executions of crawl round n `round-<n>`
+  * (the terminator is consulted once at the head of every round) and
+  * stops the crawl after `rounds` rounds.
+  */
+final class RoundTagger(rounds: Int) extends CrawlTerminator {
+  private var n = 0
+  override def isTerminated(): Boolean = {
+    val sc = SparkTestSession.spark.sparkContext
+    sc.clearJobTags()
+    n += 1
+    sc.addJobTag(s"round-$n")
+    n > rounds
   }
 }

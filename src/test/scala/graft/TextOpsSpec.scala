@@ -991,6 +991,65 @@ class FrontierStoreSpec extends AnyFunSuite {
       s"got $resolved")
   }
 
+  test("WAL: folding tombstone-only batches into a fresh root advances the watermark") {
+    import spark.implicits._
+    import graft.schema.CrawlStateUrl
+    val root = java.nio.file.Files.createTempDirectory("graft-walE").toString
+    // a fresh root whose every WAL row is a REMOVED tombstone: the fold
+    // writes no bucket, but it must still record the watermark
+    (0L to 1L).foreach { seq =>
+      graft.crawl.FrontierStore.appendWal(spark, root,
+        Seq(CrawlStateUrl(s"http://t.com/$seq", "t.com", "REMOVED",
+          Long.MaxValue, 0.0f, Long.MaxValue)).toDF(), seq)
+    }
+    graft.crawl.FrontierStore.compactWal(spark, root, buckets = 4)
+    val left = Option(new java.io.File(s"$root/_wal").list()).toSeq.flatten
+    assert(left.isEmpty, s"folded tombstone batches never reclaimed: $left")
+    assert(graft.crawl.FrontierStore.nextWalSeq(spark, root) == 2L)
+    assert(graft.crawl.FrontierStore.read(spark, root).isEmpty)
+    // the bucket-less manifest stays a valid base for the next fold
+    graft.crawl.FrontierStore.appendWal(spark, root,
+      Seq(CrawlStateUrl("http://t.com/live", "t.com", "UNFETCHED", 5L, 1.0f, 0L))
+        .toDF(), 2L)
+    graft.crawl.FrontierStore.compactWal(spark, root, buckets = 4)
+    assert(graft.crawl.FrontierStore.read(spark, root).get
+      .select("url").as[String].collect().toSeq == Seq("http://t.com/live"))
+  }
+
+  test("frontier reads take the written schema and run no job outside a SQL execution") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-walF").toString
+    // a decimal-score store (the schema a fixed CrawlStateUrl read gets
+    // wrong) over more bucket dirs than Spark lists without a job
+    val rows = (0 until 80).map(i =>
+        (s"http://s$i.com/a", s"s$i.com", "UNFETCHED", 1L, 0L))
+      .toDF("url", "pld", "status", "statusTime", "nextFetchTime")
+      .select(col("url"), col("pld"), col("status"), col("statusTime"),
+        lit(BigDecimal("1.50")).cast("decimal(10,2)").as("score"),
+        col("nextFetchTime"))
+    graft.crawl.FrontierStore.mergeInto(spark, root, rows, buckets = 64)
+    assert(new java.io.File(s"$root/g0").list().count(_.startsWith("bucket=")) >
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    graft.crawl.FrontierStore.appendWal(spark, root, rows.limit(3), 0L)
+    val sc = spark.sparkContext
+    val jobs = new JobsByTag
+    sc.addSparkListener(jobs)
+    sc.addJobTag("reads")
+    try {
+      val stored = graft.crawl.FrontierStore.read(spark, root).get
+      val resolved = graft.crawl.FrontierStore.readResolved(spark, root).get
+      assert(resolved.count() == 80)
+      graft.crawl.FrontierStore.compactWal(spark, root, buckets = 64)
+      org.apache.spark.TestBus.drain(sc)
+      assert(stored.schema("score").dataType.typeName == "decimal(10,2)")
+      assert(resolved.schema == stored.schema)
+      assert(jobs.counts("reads").outsideSql.get == 0, jobs.counts("reads"))
+    } finally {
+      sc.removeJobTag("reads")
+      sc.removeSparkListener(jobs)
+    }
+  }
+
   test("a legacy b<bucket>/v<ver> store reads and migrates as commits touch it") {
     import spark.implicits._
     import graft.schema.CrawlStateUrl
