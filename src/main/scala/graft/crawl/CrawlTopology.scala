@@ -402,7 +402,9 @@ object CrawlTopology {
     // journal/parsed accumulate incrementally with periodic lineage
     // truncation: a plain per-round buffer folds into an R-node union
     // plan whose ANALYSIS cost blows up on long crawls before the data
-    // does — compacting every `compactEvery` appends caps the plan depth
+    // does — compacting every `compactEvery` appends caps the plan depth.
+    // The union has one partition per appended partition; the compaction
+    // coalesces them to seamParts so it is not one tiny task per append
     val emptyParsed =
       Seq.empty[(String, String, String, String, Float, String, Map[String, String])]
         .toDF("url", "pld", "title", "text", "score", "language", "parsedMeta")
@@ -419,7 +421,7 @@ object CrawlTopology {
         .select("round", "stage", "url", "status"))
       journalPending += 1
       if (journalPending >= cfg.compactEvery) {
-        journalAcc = journalAcc.localCheckpoint(true)
+        journalAcc = journalAcc.coalesce(seamParts).localCheckpoint(true)
         journalPending = 0
       }
     }
@@ -750,7 +752,7 @@ object CrawlTopology {
         parsedAcc = parsedAcc.unionByName(parsedOut)
         parsedPending += 1
         if (parsedPending >= cfg.compactEvery) {
-          parsedAcc = parsedAcc.localCheckpoint(true)
+          parsedAcc = parsedAcc.coalesce(seamParts).localCheckpoint(true)
           parsedPending = 0
         }
         journal(round, "parse",

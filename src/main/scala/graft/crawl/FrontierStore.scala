@@ -281,12 +281,15 @@ object FrontierStore {
     // generation dir (overwrite replaces any orphan a crashed attempt at
     // this same — unreferenced — version left behind). REMOVED winners
     // ([[retire]] tombstones) are filtered HERE — the physical deletion
-    // point: the rewritten bucket simply no longer carries the url
+    // point: the rewritten bucket simply no longer carries the url. The
+    // explicit partition count keeps AQE from coalescing a small fold's
+    // shuffle into ONE task that writes every bucket serially
     val genDir = s"$root/g$next"
     UrlStateMerger.mergeFrontier(base)
       .filter(col("status") =!= graft.schema.FetchStatus.REMOVED)
       .withColumn("bucket", bucketOf(buckets))
-      .repartition(col("bucket"))
+      .repartition(
+        math.min(buckets, spark.sparkContext.defaultParallelism), col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(genDir)
     phase("write")
     // ONE listing decides which affected buckets wrote data; a bucket
@@ -322,11 +325,13 @@ object FrontierStore {
     // round trips — the cost that matters on object storage). Best-
     // effort: a failed stats write must NOT abort a data commit whose
     // write already landed — an absent sidecar is merely unpruned
-    // (the lenient-read contract), never wrong
+    // (the lenient-read contract), never wrong. No manifest references
+    // the generation dir until the flip below, so the sidecar is a plain
+    // create, not a temp-plus-rename
     graft.util.Pooled.ordered(
         present, threads = 16, name = "bucketstats") { b =>
       try graft.operators.DataSkipping.writeStats(
-        spark, s"$genDir/bucket=$b", StatsCols, threads = 1)
+        spark, s"$genDir/bucket=$b", StatsCols, threads = 1, atomic = false)
       catch { case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger("graft.crawl.FrontierStore")
           .warn(s"skip-stats sidecar for bucket $b g$next failed (reads " +

@@ -147,9 +147,12 @@ object DataSkipping {
     * sidecar or the new one, never a partial). Metadata-only: one pooled
     * footer read per file. Public so a layout produced by other writers
     * (e.g. an externally sorted corpus) can adopt the skip layer too.
+    * `atomic = false` writes the sidecar with a plain create instead —
+    * only for a dir no reader can resolve yet (a new generation dir
+    * before its manifest flip), where no partial file can be observed.
     */
   def writeStats(spark: SparkSession, dir: String, cols: Seq[String],
-      threads: Int = 16): Unit = {
+      threads: Int = 16, atomic: Boolean = true): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = StoreProtocol.fs(spark, dir)
     val files = dataFiles(fs, dir)
@@ -160,8 +163,12 @@ object DataSkipping {
             s"\t${mm.map(_._2.toString).getOrElse("")}"
         }
       }.flatten
-    graft.util.FsAtomic.writePointer(
-      fs, new Path(dir), StatsDir, rows.mkString("\n"))
+    val body = rows.mkString("\n")
+    if (atomic) graft.util.FsAtomic.writePointer(fs, new Path(dir), StatsDir, body)
+    else {
+      val out = fs.create(new Path(dir, StatsDir), true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
   }
 
   /** The directory's data files — the SAME universe the full-scan

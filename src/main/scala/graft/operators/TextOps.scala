@@ -57,14 +57,15 @@ object TextOps {
   }
 
   /** Whole MinHash signature (tokens -> k-shingles -> 32-bit md5 hashes ->
-    * numHashes permutation minima) in one Scala UDF (scalar core shared
-    * with the native expression in [[graft.plans.TextCodegen]]).
-    * Value-identical to the
-    * staged [[minhashSigSql]] HOF pipeline but stays codegen-friendly:
-    * Catalyst inlines referenced-once projections into downstream lambdas /
-    * generators, and interpreted HOFs then re-evaluate the whole pipeline
-    * per element (a measured 60s-vs-0.2s cliff on 5k docs at sf0.1 when the
-    * sig expression lands inside an explode).
+    * numHashes permutation minima
+    * h_j(x) = ((j*2654435761 + 1) mod p) * x + j*97 + 13 mod p, p = 1e9+7)
+    * in one Scala UDF (scalar core shared with the native expression in
+    * [[graft.plans.TextCodegen]]). A higher-order-function form of the
+    * same arithmetic is interpreted, and Catalyst inlines referenced-once
+    * projections into downstream lambdas / generators, which then
+    * re-evaluate the whole pipeline per element (a measured 60s-vs-0.2s
+    * cliff on 5k docs at sf0.1 when the sig expression lands inside an
+    * explode).
     */
   def minhashSigUdf(shingleK: Int, numHashes: Int): UserDefinedFunction =
     udf { (text: String) =>
@@ -88,30 +89,6 @@ object TextOps {
     */
   def hash32Sql(s: String): String =
     s"cast(conv(substr(md5($s), 1, 8), 16, 10) as bigint)"
-
-  /** Array of 32-bit hashes of the elements of an array column. */
-  def hashArraySql(arrCol: String): String =
-    s"transform($arrCol, s -> ${hash32Sql("s")})"
-
-  /** MinHash signature (K permutations) over an array expression of 32-bit
-    * hashes: h_j(x) = ((j*2654435761 + 1) mod p) * x + j*97 + 13 mod p,
-    * p = 1e9+7. All intermediates stay below 2^63 (ANSI-overflow-safe).
-    */
-  def minhashSigSql(hashesSql: String, k: Int): String =
-    s"""transform(sequence(0, ${k - 1}), j ->
-       | array_min(transform($hashesSql, h ->
-       |   (((j * 2654435761 + 1) % 1000000007) * h + j * 97 + 13) % 1000000007)))"""
-      .stripMargin.replaceAll("\n", " ")
-
-  /** 32-bit SimHash over an array expression of 32-bit token hashes:
-    * per-bit majority vote of ±1 contributions.
-    */
-  def simhash32Sql(hashesSql: String): String =
-    s"""aggregate(transform(sequence(0, 31), b ->
-       | CASE WHEN aggregate($hashesSql, 0L, (acc, h) ->
-       |     acc + (CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END)) > 0
-       |   THEN shiftleft(1L, b) ELSE 0L END),
-       | 0L, (acc, x) -> acc + x)""".stripMargin.replaceAll("\n", " ")
 
   // --------------------------------------------------------- deduplication
 
@@ -584,12 +561,13 @@ object TextOps {
         sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"))
   }
 
-  /** Per-document 32-bit SimHash over distinct token hashes (staged). */
+  /** Per-document 32-bit SimHash over the md5-prefix hashes
+    * ([[hash32Sql]]) of the distinct [[tokensSql]] tokens: per-bit
+    * majority vote of ±1 contributions ([[graft.plans.SimHash32Expr]]).
+    */
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"),
-      expr(s"array_distinct(${tokensSql(textCol)})").as("toks"))
-      .select(col("doc_id"), expr(hashArraySql("toks")).as("hs"))
-      .select(col("doc_id"), expr(simhash32Sql("hs")).as("simhash"))
+      graft.plans.TextExpressions.simhash32(col(textCol)).as("simhash"))
 
   /** 60-bit SimHash over distinct word-k-shingle hashes, one UDF per row
     * (60 bits = 15 md5 hex chars, so the value stays positive in an
@@ -1610,46 +1588,15 @@ object TextOps {
     * complements are [[duplicatedWindows]] (corpus-wide spans) and
     * [[repetitionFeatures]] (distinct-bigram ratio).
     *
-    * Scale shape: two explodes, each into a (doc, gram)-keyed hash
-    * aggregate then a doc-keyed one — all partial->final, everything
-    * keyed by doc_id or finer, then one co-partitioned doc_id join to
-    * stitch the two widths. No corpus-wide key anywhere (the grams are
-    * scoped per-doc), so hot-shingle skew cannot arise.
+    * Scale shape: one projection, one row per input row
+    * ([[graft.plans.GopherRepetitionExpr]]) — the grams are scoped per
+    * document, so counting them never needs a shuffle.
     */
   def gopherRepetition(
-      df: DataFrame, idCol: String, textCol: String, w: Int = 5): DataFrame = {
-    val base = df.select(col(idCol).as("doc_id"),
-      expr(tokensSql(textCol)).as("toks"))
-    def gramStats(width: Int, dup: Boolean) = {
-      val grams = base.filter(size(col("toks")) >= width)
-        .select(col("doc_id"),
-          explode(expr(s"transform(sequence(0, size(toks) - $width)," +
-            s" i -> concat_ws(' ', slice(toks, i + 1, $width)))")).as("g"))
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-      if (dup)
-        grams.groupBy("doc_id").agg(sum(col("c")).as("n_grams"),
-          sum(when(col("c") >= 2, col("c")).otherwise(0L)).as("dup_grams"))
-      else
-        grams.groupBy("doc_id").agg(sum(col("c")).as("n_grams"),
-          max(col("c")).as("top_gram"))
-    }
-    val bi = gramStats(2, dup = false)
-      .select(col("doc_id"), col("n_grams").as("n_bigrams"),
-        col("top_gram").as("top_bigram"))
-    val win = gramStats(w, dup = true)
-      .select(col("doc_id"), col("n_grams").as("n_windows"),
-        col("dup_grams").as("dup_windows"))
-    base.select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"))
-      .join(bi, Seq("doc_id"), "left")
-      .join(win, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("top_bigram"), lit(0L)).as("top_bigram"),
-        expr("(100 * coalesce(top_bigram, 0))" +
-          " div greatest(coalesce(n_bigrams, 0), 1)").as("top_bigram_pct"),
-        coalesce(col("dup_windows"), lit(0L)).as("dup_windows"),
-        expr("(100 * coalesce(dup_windows, 0))" +
-          " div greatest(coalesce(n_windows, 0), 1)").as("dup_window_pct"))
-  }
+      df: DataFrame, idCol: String, textCol: String, w: Int = 5): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+      graft.plans.TextExpressions.gopher_repetition(col(textCol), w).as("rep"))
+      .select(col("doc_id"), col("rep.*"))
 
   /** Cross-source duplication matrix — the corpus-composition audit
     * ("how much of source A is already in source B?" — the number that
