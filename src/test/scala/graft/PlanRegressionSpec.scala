@@ -395,6 +395,13 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(!plan.contains("Aggregate"), plan.take(3000))
   }
 
+  test("q92: repetition grams are doc-scoped — only equi joins on doc_id") {
+    val plan = planOf("q92_gopher_rep")
+    assert(!plan.contains("CartesianProduct"), plan.take(3000))
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    assert(!plan.contains("Window"), plan.take(3000))
+  }
+
   test("q92: repetition grams are doc-scoped — a pure projection, no " +
     "join, exchange, aggregate or generate") {
     val plan = planOf("q92_gopher_rep")
