@@ -300,12 +300,13 @@ object CrawlCorpusLoop {
     if (!exists(spark, s"$workDir/_merged_$wave")) {
       val roundMs = CdxLookup.allEntries(spark, cdxDir)
         .agg(max(CdxLookup.cdxTsToMs(col("ts")))).head().getLong(0)
-      val pldUdf = udf(graft.functions.UrlFunctions.extractPld _)
       val updates = spark.read.parquet(parsedDir).select("url")
         .withColumn("status", lit(FS.FETCHED))
         .unionByName(spark.read.parquet(goneDir).select("url")
           .withColumn("status", lit(FS.HTTP_GONE)))
-        .select(col("url"), pldUdf(col("url")).as("pld"), col("status"),
+        .select(col("url"),
+          graft.plans.UrlExpressions.extract_pld(col("url")).as("pld"),
+          col("status"),
           lit(roundMs).as("statusTime"), lit(0.0f).as("score"),
           lit(roundMs).as("nextFetchTime"))
       FrontierStore.mergeInto(spark, s"$workDir/frontier", updates,

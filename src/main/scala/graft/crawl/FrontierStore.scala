@@ -1,14 +1,12 @@
 package graft.crawl
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.UrlStateMerger
+import graft.plans.UrlExpressions.extract_pld
+import graft.util.ParquetRead
 
 /** Durable frontier storage: the crawl DB as a pld-bucketed parquet table
   * with **partition-level merge-on-read** (SURVEY §2.12/§7.4: at cluster
@@ -128,33 +126,9 @@ object FrontierStore {
       else {
         val paths = manifest.toSeq.sortBy(_._1)
           .map { case (b, tok) => bucketLoc(root, b, tok) }
-        Some(readParquet(spark, paths))
+        Some(ParquetRead(spark, paths))
       }
     }
-
-  /** Parquet read that runs no Spark job: the schema is the one Spark
-    * recorded in the first file's footer when it wrote the data (one
-    * driver-side footer read instead of a schema-inference job; it must
-    * come from the files — a store's `score` is float or decimal, see
-    * [[retire]]), and each scan takes at most Spark's parallel-listing
-    * threshold of dirs (past it Spark lists them in a job of its own;
-    * bucket dirs hold a file or two, so the driver lists them faster).
-    */
-  private def readParquet(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(dirs.head)
-    val recorded = dir.getFileSystem(conf).listStatus(dir)
-      .find(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try Option(r.getFileMetaData.getKeyValueMetaData
-          .get(ParquetReadSupport.SPARK_METADATA_KEY)) finally r.close()
-      }
-    val reader = recorded.fold(spark.read)(json =>
-      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]))
-    val perScan = spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-    dirs.grouped(math.max(1, perScan)).map(reader.parquet(_: _*)).reduce(_ union _)
-  }
 
   /** The journal columns every bucket version records a `_SKIP` sidecar
     * for at commit time: the two time axes the engine's scans band on
@@ -273,7 +247,7 @@ object FrontierStore {
       case None => updates
       case Some(tagged) =>
         if (currentAffected.isEmpty) tagged.drop("bucket")
-        else readParquet(spark, currentAffected)
+        else ParquetRead(spark, currentAffected)
           .unionByName(tagged.drop("bucket"))
     }
 
@@ -414,7 +388,6 @@ object FrontierStore {
       urlCol: String = "url"): Unit =
     latestVersion(spark, root).foreach { v =>
       val (buckets, _, _, _) = readManifest(spark, root, v)
-      val pldUdf = udf(graft.functions.UrlFunctions.extractPld _)
       // tombstone rows must carry the STORE's exact column types (score
       // may be float or decimal depending on the frontier's producer) —
       // a type-widening union would rewrite touched buckets under a new
@@ -428,7 +401,7 @@ object FrontierStore {
       // no-op otherwise), so a checkpoint at this seam was a redundant
       // extra materialization job on the purge path
       val updates = urls.select(col(urlCol).as("url")).distinct()
-        .select(col("url"), pldUdf(col("url")).as("pld"),
+        .select(col("url"), extract_pld(col("url")).as("pld"),
           lit(graft.schema.FetchStatus.REMOVED).as("status"),
           lit(Long.MaxValue).as("statusTime"),
           lit(0.0f).as("score"),
@@ -529,7 +502,7 @@ object FrontierStore {
     val stored = read(spark, root)
     val wal =
       if (pending.isEmpty) None
-      else Some(readParquet(spark, pending.map(_._2.toString)))
+      else Some(ParquetRead(spark, pending.map(_._2.toString)))
     (stored, wal) match {
       case (None, None) => None
       case (Some(s), None) => Some(s)
@@ -557,7 +530,7 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     if (pending.nonEmpty) {
-      val updates = readParquet(spark, pending.map(_._2.toString))
+      val updates = ParquetRead(spark, pending.map(_._2.toString))
       mergeInto(spark, root, updates, buckets,
         walWatermark = Some(pending.map(_._1).max))
     }
@@ -581,7 +554,7 @@ object FrontierStore {
         .select(pmod(xxhash64(lit(pld)), lit(buckets)).cast("int"))
         .head().getInt(0)
       manifest.get(b).map { tok =>
-        readParquet(spark, Seq(bucketLoc(root, b, tok)))
+        ParquetRead(spark, Seq(bucketLoc(root, b, tok)))
           .filter(col("pld") === pld)
       }
     }

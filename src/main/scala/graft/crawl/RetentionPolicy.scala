@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.UrlFunctions
+import graft.plans.UrlExpressions.extract_pld
 import graft.schema.{FetchStatus => FS}
 import graft.util.StoreProtocol
 
@@ -85,8 +86,6 @@ object RetentionPolicy {
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val pldUdf = udf(UrlFunctions.extractPld _)
 
   /** Completed wave slots (dense by protocol), ascending. */
   def completedWaves(spark: SparkSession, workDir: String): Seq[Int] =
@@ -190,7 +189,7 @@ object RetentionPolicy {
             // coalesce a small sweep's shuffle to one task, capping the
             // sweep at robotsThreads total concurrency
             .repartition(
-              spark.sparkContext.defaultParallelism, pldUdf(col("url")))
+              spark.sparkContext.defaultParallelism, extract_pld(col("url")))
             .as[(String, Long)]
             .mapPartitions { it =>
               // robotsUrl → Some(rules) when the answer is DEFINITIVE

@@ -23,20 +23,16 @@ final case class RobotsRules(
     // so the URL retries once the short error TTL re-fetches robots
     deferVisits: Boolean = false) extends Serializable {
 
-  @transient private lazy val compiled: Seq[(java.util.regex.Pattern, Boolean, Int)] =
-    rules.map { case (pat, allow) =>
-      (RobotsRules.compile(pat), allow, pat.length)
-    }
-
   /** RFC 9309 evaluation: of all matching rules, the longest pattern
     * wins; at equal length Allow beats Disallow; no match = allowed.
     */
   def isAllowed(path: String): Boolean = {
     var bestLen = -1
     var bestAllow = true
-    compiled.foreach { case (p, allow, len) =>
-      if (p.matcher(path).lookingAt() &&
-        (len > bestLen || (len == bestLen && allow && !bestAllow))) {
+    rules.foreach { case (pat, allow) =>
+      val len = pat.length
+      if ((len > bestLen || (len == bestLen && allow && !bestAllow)) &&
+        RobotsRules.matches(pat, path)) {
         bestLen = len
         bestAllow = allow
       }
@@ -86,16 +82,42 @@ object RobotsRules {
       Some(allowAll)
     else None
 
-  /** Compile a robots path pattern: literal prefix match with `*` as any
-    * run and a trailing `$` anchoring the end of the path.
+  private def isLineTerminator(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  /** Does robots path pattern `pat` match a prefix of `path`? A `*` is any
+    * run of characters, a trailing `$` anchors the end of the path, and
+    * everything else is literal. Matched by hand, with the regex
+    * semantics the rules were first written against: a `*` spans no line
+    * terminator, and `$` also holds before a final one (`\r\n` counts as
+    * one).
     */
-  private[crawl] def compile(pat: String): java.util.regex.Pattern = {
+  private[graft] def matches(pat: String, path: String): Boolean = {
     val anchored = pat.endsWith("$")
-    val core = if (anchored) pat.dropRight(1) else pat
-    val rx = core.split("\\*", -1)
-      .map(java.util.regex.Pattern.quote)
-      .mkString(".*")
-    java.util.regex.Pattern.compile(rx + (if (anchored) "$" else ""))
+    val end = if (anchored) pat.length - 1 else pat.length
+    val n = path.length
+    def atEnd(s: Int): Boolean =
+      s == n ||
+        (s == n - 2 && path.charAt(s) == '\r' && path.charAt(s + 1) == '\n') ||
+        (s == n - 1 && isLineTerminator(path.charAt(s)) &&
+          !(path.charAt(s) == '\n' && s > 0 && path.charAt(s - 1) == '\r'))
+    def go(p0: Int, s0: Int): Boolean = {
+      var p = p0
+      var s = s0
+      while (p < end && pat.charAt(p) != '*') {
+        if (s == n || path.charAt(s) != pat.charAt(p)) return false
+        p += 1
+        s += 1
+      }
+      if (p == end) return !anchored || atEnd(s)
+      while (p < end && pat.charAt(p) == '*') p += 1
+      while (!go(p, s)) {
+        if (s == n || isLineTerminator(path.charAt(s))) return false
+        s += 1
+      }
+      true
+    }
+    go(0, 0)
   }
 
   /** Parse a robots.txt body. Like the reference's use, rules are taken

@@ -9,40 +9,142 @@ import java.nio.charset.StandardCharsets
   * Semantics follow the reference's "clean URLs" stage (reference:
   * src/main/java/com/scaleunlimited/flinkcrawler/urls/SimpleUrlNormalizer
   * .java:266-365, SimpleUrlValidator.java:54-80, pojos/ValidUrl.java:55-170)
-  * re-expressed as pure Scala functions so they can run as Spark UDFs, be
-  * registered for SQL, and be unit-tested without a SparkSession.
+  * re-expressed as pure Scala functions: the crawler calls them directly,
+  * `graft.plans.UrlExpressions` wraps them as codegen'd SQL functions,
+  * and they are unit-tested without a SparkSession.
   */
 object UrlFunctions {
+
+  // -------------------------------------------------------------------- parse
+
+  /** The parts of a URL as `java.net.URL` reports them; `host`, `path`,
+    * `query` and `ref` may be null, as there.
+    */
+  private final case class UrlParts(
+      protocol: String, host: String, port: Int, defaultPort: Int,
+      path: String, query: String, ref: String)
+
+  private def isAsciiLetter(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** Does `s` hold `lower` at `off`, ASCII letters compared without case?
+    * This is what `(?i)` matches in a Java regex (no UNICODE_CASE);
+    * `String.regionMatches(true, …)` would also fold e.g. U+017F to `s`.
+    */
+  private def startsWithAsciiCi(s: String, off: Int, lower: String): Boolean = {
+    if (off < 0 || off + lower.length > s.length) return false
+    var k = 0
+    while (k < lower.length) {
+      val c = s.charAt(off + k)
+      if ((if (c >= 'A' && c <= 'Z') (c + 32).toChar else c) != lower.charAt(k))
+        return false
+      k += 1
+    }
+    true
+  }
+
+  /** Parse `spec` exactly as `new URL(spec)` does; null where that throws.
+    * An http(s) URL whose authority is `[userinfo@]host[:port]` with a
+    * plain host name is split here in one scan. Everything else (other
+    * schemes, IPv6 literals, two `@`, other host characters, signed or
+    * long ports, no authority) goes through `java.net.URL`.
+    */
+  private def parseUrl(spec: String): UrlParts = {
+    if (spec == null) return null
+    val https = startsWithAsciiCi(spec, 0, "https://")
+    if (https || startsWithAsciiCi(spec, 0, "http://")) {
+      val p = parseHttp(spec, if (https) 8 else 7, https)
+      if (p != null) return p
+    }
+    try {
+      val u = new URL(spec)
+      UrlParts(u.getProtocol, u.getHost, u.getPort, u.getDefaultPort,
+        u.getPath, u.getQuery, u.getRef)
+    } catch { case _: Exception => null }
+  }
+
+  /** `URLStreamHandler.parseURL` for a spec whose authority starts at
+    * `a`: the ref starts at the first `#`, the query at the first `?`
+    * before it, the authority ends at the first `/` before those, and
+    * trailing characters up to `' '` are dropped. Null when the authority
+    * is not a plain `host[:port]` (the caller falls back).
+    */
+  private def parseHttp(spec: String, a: Int, https: Boolean): UrlParts = {
+    var limit = spec.length
+    while (limit > a && spec.charAt(limit - 1) <= ' ') limit -= 1
+    val hash = spec.indexOf('#', a)
+    val end = if (hash >= 0) hash else limit
+    val q = spec.indexOf('?')
+    val pathStart = if (q >= 0 && q < end) q else end
+    var e = a
+    while (e < pathStart && spec.charAt(e) != '/') e += 1
+    if (e == a) return null
+    var h = a
+    val at = spec.indexOf('@', a)
+    if (at >= 0 && at < e) {
+      val second = spec.indexOf('@', at + 1)
+      if (second >= 0 && second < e) return null
+      h = at + 1
+    }
+    var colon = h
+    while (colon < e && spec.charAt(colon) != ':') {
+      val c = spec.charAt(colon)
+      if (!(isAsciiLetter(c) || isDigit(c) || c == '.' || c == '-' || c == '_'))
+        return null
+      colon += 1
+    }
+    var port = -1
+    if (colon + 1 < e) {
+      if (e - colon - 1 > 9) return null
+      port = 0
+      var k = colon + 1
+      while (k < e) {
+        val c = spec.charAt(k)
+        if (!isDigit(c)) return null
+        port = port * 10 + (c - '0')
+        k += 1
+      }
+    }
+    UrlParts(if (https) "https" else "http", spec.substring(h, colon), port,
+      if (https) 443 else 80,
+      if (e < pathStart) spec.substring(e, pathStart) else "",
+      if (pathStart < end) spec.substring(pathStart + 1, end) else null,
+      if (hash >= 0) spec.substring(hash + 1, limit) else null)
+  }
 
   // ---------------------------------------------------------------- normalize
 
   /** Query keys stripped when they carry a value (reference
     * SimpleUrlNormalizer.java:63-76: SESSION_ID_PATTERN +
     * OTHER_IGNORED_QUERY_PARAMETERS_PATTERN — both applied by the default
-    * normalizer; key-only occurrences are kept, as there).
+    * normalizer; key-only occurrences are kept, as there), plus every
+    * `aspsessionid[a-z]*` key. Compared lowercased.
     */
-  private val StrippedQueryParamPattern =
-    ("(?i)^(sid|phpsessid|sessionid|session_id|bv_sessionid|jsessionid|" +
-      "-session|session|session_key|aspsessionid[a-z]*|cfid|cftoken|zenid|" +
-      "width|format|country|height|src|user|username|uname|return_url|" +
-      "returnurl|sort|sort_by|sortby|sort_direction|sort_key|order_by|" +
-      "orderby|sortorder|collate)$").r
+  private val StrippedQueryKeys: Set[String] = Set(
+    "sid", "phpsessid", "sessionid", "session_id", "bv_sessionid",
+    "jsessionid", "-session", "session", "session_key", "cfid", "cftoken",
+    "zenid", "width", "format", "country", "height", "src", "user",
+    "username", "uname", "return_url", "returnurl", "sort", "sort_by",
+    "sortby", "sort_direction", "sort_key", "order_by", "orderby",
+    "sortorder", "collate")
 
-  /** `/segment/../` resolution exactly as the reference does it
-    * (SimpleUrlNormalizer.java:55-56 RELATIVE_PATH_PATTERN, applied in a
-    * loop): the parent segment must contain a non-dot character, and the
-    * `..` must be followed by `/` — a bare trailing `/aa/..` is kept.
-    */
-  private val RelativePathPattern =
-    "(/[^/]*[^/.][^/]*/\\.\\./|^(/\\.\\./)+)".r
+  private def isStrippedKey(key: String): Boolean = {
+    val k = key.toLowerCase(java.util.Locale.ROOT)
+    StrippedQueryKeys.contains(k) ||
+      (k.startsWith("aspsessionid") && k.substring(12).forall(c => c >= 'a' && c <= 'z'))
+  }
 
-  /** Default-page removal at path end (reference DEFAULT_PAGE_PATTERN,
-    * SimpleUrlNormalizer.java:59-60; `?`/`&`/`#` cannot occur in a parsed
-    * path, so end-of-path is the reachable case).
+  /** Default pages removed at path end (reference DEFAULT_PAGE_PATTERN,
+    * SimpleUrlNormalizer.java:59-60: `(index|default)` dot
+    * `js[pf][afx]?|cgi|cfm|aspx?|[psx]?htm[l]?|php[3456]?`, any case).
     */
-  private val DefaultPagePattern =
-    ("(?i)/(?:index|default)\\." +
-      "(?:js[pf][afx]?|cgi|cfm|aspx?|[psx]?htm[l]?|php[3456]?)$").r
+  private val DefaultPages: Set[String] =
+    (Seq("jsp", "jsf", "jspa", "jspf", "jspx", "jsfa", "jsff", "jsfx",
+      "cgi", "cfm", "asp", "aspx", "php", "php3", "php4", "php5", "php6") ++
+      Seq("", "p", "s", "x").flatMap(p => Seq(p + "htm", p + "html")))
+      .flatMap(ext => Seq("index." + ext, "default." + ext)).toSet
 
   /** Characters that stay unescaped in paths/queries; everything else is
     * percent-encoded. Matches RFC 3986 unreserved + common sub-delims kept
@@ -87,15 +189,18 @@ object UrlFunctions {
     out.toString
   }
 
+  private val Hex = "0123456789abcdef"
+
   private def percentEncode(s: String, inQuery: Boolean): String = {
     val out = new java.lang.StringBuilder(s.length)
     s.foreach { c =>
       if (c == ' ') out.append('+') // reference encodes spaces as '+'
       else if (isSafeChar(c, inQuery) || c == '%') out.append(c)
       else {
+        // per UTF-16 unit, so a lone surrogate half encodes as '?'
         c.toString.getBytes(StandardCharsets.UTF_8).foreach { b =>
           // lowercase hex, matching the reference's encoder output
-          out.append('%').append(f"${b & 0xff}%02x")
+          out.append('%').append(Hex.charAt((b >> 4) & 0xf)).append(Hex.charAt(b & 0xf))
         }
       }
     }
@@ -108,9 +213,14 @@ object UrlFunctions {
     * double-encoding (%2573id -> %73id -> sid) — a single pass would
     * leave a decodable layer that re-decodes on the NEXT normalize pass,
     * breaking idempotence. Bad escapes are stable immediately (repair
-    * keeps them literal).
+    * keeps them literal). A component of safe characters only is already
+    * stable. Both steps are character-local and a `%xx` escape never
+    * spans a `/`, so a whole path gives what its segments give one by one.
     */
   private def normalizeEscaping(s: String, inQuery: Boolean): String = {
+    var i = 0
+    while (i < s.length && s.charAt(i) != '%' && isSafeChar(s.charAt(i), inQuery)) i += 1
+    if (i == s.length) return s
     var cur = s
     var rounds = 0
     while (rounds < 4) {
@@ -122,18 +232,86 @@ object UrlFunctions {
     cur
   }
 
-  /** Resolve `/seg/../` runs with the reference's iterative pattern —
-    * a trailing `/..` without a slash is deliberately kept (their golden
-    * case), and leading `/../` runs collapse.
+  /** The leftmost match of the reference's RELATIVE_PATH_PATTERN
+    * (SimpleUrlNormalizer.java:55-56) as `start << 32 | end`, or -1: a
+    * `/seg/../` whose parent segment contains a non-dot character, or a
+    * leading run of `/../`. The `..` must be followed by `/`.
+    */
+  private def dotSegmentMatch(p: String): Long = {
+    var s = p.indexOf('/')
+    while (s >= 0) {
+      val next = p.indexOf('/', s + 1)
+      if (next > s + 1 && p.startsWith("/../", next)) {
+        var k = s + 1
+        while (k < next && p.charAt(k) == '.') k += 1
+        if (k < next) return (s.toLong << 32) | (next + 4)
+      }
+      if (s == 0 && p.startsWith("/../")) {
+        var e = 4
+        while (p.startsWith("/../", e)) e += 4
+        return e.toLong
+      }
+      s = next
+    }
+    -1L
+  }
+
+  /** Resolve `/seg/../` runs the way the reference applies its pattern —
+    * replace the leftmost match by `/` until none is left — so a
+    * trailing `/..` without a slash is kept (their golden case) and
+    * leading `/../` runs collapse.
     */
   private[functions] def normalizePathSegments(path0: String): String = {
     var path = path0
-    var m = RelativePathPattern.findFirstMatchIn(path)
-    while (m.isDefined) {
-      path = path.substring(0, m.get.start) + "/" + path.substring(m.get.end)
-      m = RelativePathPattern.findFirstMatchIn(path)
+    var m = if (path.contains("/../")) dotSegmentMatch(path) else -1L
+    while (m >= 0) {
+      path = path.substring(0, (m >>> 32).toInt) + "/" + path.substring(m.toInt)
+      m = dotSegmentMatch(path)
     }
     path
+  }
+
+  /** Drop every `;jsessionid=` matrix param (any case) up to the next `;`,
+    * scanning left to right once, as `replaceAll` does.
+    */
+  private def stripJsessionid(path: String): String = {
+    var i = path.indexOf(';')
+    if (i < 0) return path
+    val sb = new java.lang.StringBuilder(path.length)
+    var from = 0
+    while (i >= 0) {
+      if (startsWithAsciiCi(path, i, ";jsessionid=")) {
+        sb.append(path, from, i)
+        var j = i + 12
+        while (j < path.length && path.charAt(j) != ';' &&
+          path.charAt(j) != '?' && path.charAt(j) != '#') j += 1
+        from = j
+        i = path.indexOf(';', j)
+      } else i = path.indexOf(';', i + 1)
+    }
+    sb.append(path, from, path.length).toString
+  }
+
+  /** Append the normalized form of a raw URL path: strip ;jsessionid, then
+    * escape-normalize FIRST — dot-segment resolution, default-page
+    * removal and the `.`/empty filters must see final forms, or
+    * %2e-encoded dot segments would survive one pass and resolve on the
+    * next (idempotence).
+    */
+  private def appendPath(sb: java.lang.StringBuilder, raw: String): Unit = {
+    var path = stripJsessionid(raw)
+    if (path.isEmpty) path = "/"
+    path = normalizePathSegments(normalizeEscaping(path, inQuery = false))
+    val last = path.lastIndexOf('/')
+    if (DefaultPages.contains(path.substring(last + 1).toLowerCase(java.util.Locale.ROOT)))
+      path = path.substring(0, last + 1)
+    // '/a/.' is the same location as '/a/' (RFC 3986 dot-segment), so a
+    // trailing '/.' preserves the trailing slash after the '.' drops out
+    val trailingSlash = path.endsWith("/") || path.endsWith("/.")
+    val segs = path.split("/").filter(seg => seg.nonEmpty && seg != ".")
+    if (segs.isEmpty) sb.append('/')
+    else segs.foreach(seg => sb.append('/').append(seg))
+    if (segs.nonEmpty && trailingSlash) sb.append('/')
   }
 
   private def normalizeHostname(host: String): String = {
@@ -142,78 +320,76 @@ object UrlFunctions {
     h
   }
 
+  /** Drop empty parts (q=1&&z=2 -> q=1&z=2, as the reference does) and
+    * stripped keys that carry a value (key-only params are kept: the
+    * reference patterns need '='). Keys arrive escape-normalized, so a
+    * stripped key never hides behind an escape. A one-char `split` runs
+    * no regex.
+    */
   private def stripSessionParams(query: String): String =
-    query
-      .split("&", -1)
-      .filter(_.nonEmpty) // reference drops empty parts: q=1&&z=2 -> q=1&z=2
-      .filter { kv =>
-        kv.indexOf('=') match {
-          case -1 => true // key-only params are kept (reference patterns need '=')
-          case i => // keys arrive escape-normalized (see normalizeUrl)
-            StrippedQueryParamPattern.findFirstIn(kv.substring(0, i)).isEmpty
-        }
-      }
-      .mkString("&")
+    query.split("&", -1).filter { kv =>
+      val eq = kv.indexOf('=')
+      kv.nonEmpty && (eq < 0 || !isStrippedKey(kv.substring(0, eq)))
+    }.mkString("&")
+
+  /** Java `trim` (every char up to `' '` at both ends), then drop tabs,
+    * CRs and LFs inside.
+    */
+  private def stripControls(raw: String): String = {
+    val t = raw.trim
+    if (t.exists(c => c == '\t' || c == '\r' || c == '\n'))
+      t.filterNot(c => c == '\t' || c == '\r' || c == '\n')
+    else t
+  }
+
+  private def isLineTerminator(c: Char): Boolean =
+    c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+
+  /** Does `url` lack a scheme (the reference's test, as the regex pair
+    * `^[a-z][a-z0-9+.-]*:.*` / `^[a-z0-9.-]+:\d+.*`, any case)? A
+    * `host:port` prefix is not a scheme, and `.` matches no line
+    * terminator, so one anywhere after the colon fails both tests.
+    */
+  private def needsDefaultProtocol(url: String): Boolean = {
+    var i = 0
+    var plus = false
+    while (i < url.length && {
+      val c = url.charAt(i)
+      plus ||= c == '+'
+      isAsciiLetter(c) || isDigit(c) || c == '.' || c == '-' || c == '+'
+    }) i += 1
+    if (i == url.length || url.charAt(i) != ':' ||
+      url.indexWhere(isLineTerminator, i + 1) >= 0) true
+    else !isAsciiLetter(url.charAt(0)) ||
+      (i > 0 && !plus && i + 1 < url.length && isDigit(url.charAt(i + 1)))
+  }
 
   /** Canonicalize a URL (default protocol, lowercase host, default-port and
     * default-page removal, dot-segment resolution, session-param stripping,
-    * percent-escaping normalization, fragment removal). Never throws; input
-    * that cannot be parsed is returned trimmed.
+    * percent-escaping normalization, fragment removal) in one scan per
+    * component, with no regex and, for http(s), no `java.net.URL`. Never
+    * throws; input that cannot be parsed is returned trimmed.
     */
   def normalizeUrl(rawUrl: String): String = {
     if (rawUrl == null) return null
-    var url = rawUrl.trim.replaceAll("[\\t\\r\\n]", "")
+    val url = stripControls(rawUrl)
     if (url.isEmpty) return url
-    // default protocol
-    if (!url.matches("(?i)^[a-z][a-z0-9+.-]*:.*") || url.matches("(?i)^[a-z0-9.-]+:\\d+.*"))
-      url = "http://" + url
-    val parsed =
-      try new URL(url)
-      catch { case _: Exception => return url }
-
-    val protocol = parsed.getProtocol.toLowerCase(java.util.Locale.ROOT)
-    val host = normalizeHostname(Option(parsed.getHost).getOrElse(""))
+    val spec = if (needsDefaultProtocol(url)) "http://" + url else url
+    val p = parseUrl(spec)
+    if (p == null) return spec
+    val protocol = p.protocol.toLowerCase(java.util.Locale.ROOT)
     val defaultPort = if (protocol == "https") 443 else 80
-    val port = parsed.getPort match {
-      case -1 => -1
-      case p if p == defaultPort => -1
-      case p => p
-    }
-
-    // path: strip ;jsessionid matrix param, then escape-normalize each
-    // segment FIRST — dot-segment resolution, default-page removal and
-    // the `.`/empty filters must see final forms, or %2e-encoded dot
-    // segments would survive one pass and resolve on the next
-    // (idempotence). Per-segment encoding cannot create new boundaries
-    // (an encoded %2f re-encodes inside its segment).
-    var path = Option(parsed.getPath).getOrElse("")
-    path = path.replaceAll("(?i);jsessionid=[^?#;]*", "")
-    if (path.isEmpty) path = "/"
-    path = path.split("/", -1)
-      .map(normalizeEscaping(_, inQuery = false)).mkString("/")
-    path = normalizePathSegments(path)
-    path = DefaultPagePattern.replaceFirstIn(path, "/")
-    // '/a/.' is the same location as '/a/' (RFC 3986 dot-segment), so a
-    // trailing '/.' preserves the trailing slash after the '.' drops out
-    val trailingSlash = path.endsWith("/") || path.endsWith("/.")
-    val segs = path.split("/").filter(s => s.nonEmpty && s != ".")
-    path =
-      if (segs.isEmpty) "/"
-      else segs.mkString("/", "/", if (trailingSlash) "/" else "")
-
-    // query: same ordering principle — escape-normalize first so the
-    // session-param strip and the emitted form share one representation
-    // (an encoded %3D/%26 becomes structural on re-parse otherwise)
-    var query = Option(parsed.getQuery).getOrElse("")
-    if (query.nonEmpty) {
-      query = normalizeEscaping(query, inQuery = true)
-      query = stripSessionParams(query)
-    }
-
-    val sb = new java.lang.StringBuilder(url.length)
-    sb.append(protocol).append("://").append(host)
-    if (port != -1) sb.append(':').append(port)
-    sb.append(path)
+    // query: escape-normalize first so the session-param strip and the
+    // emitted form share one representation (an encoded %3D/%26 becomes
+    // structural on re-parse otherwise)
+    val query =
+      if (p.query == null || p.query.isEmpty) ""
+      else stripSessionParams(normalizeEscaping(p.query, inQuery = true))
+    val sb = new java.lang.StringBuilder(spec.length + 8)
+    sb.append(protocol).append("://")
+      .append(normalizeHostname(if (p.host == null) "" else p.host))
+    if (p.port != -1 && p.port != defaultPort) sb.append(':').append(p.port)
+    appendPath(sb, if (p.path == null) "" else p.path)
     if (query.nonEmpty) sb.append('?').append(query)
     sb.toString
   }
@@ -222,7 +398,6 @@ object UrlFunctions {
 
   private val HostnamePattern =
     "^([a-z0-9]([a-z0-9-]*[a-z0-9])?\\.)+[a-z]{2,}$".r
-  private val Ipv4Pattern = "^\\d{1,3}(\\.\\d{1,3}){3}$".r
 
   /** http(s) scheme, parseable by both URL and URI, host is a dotted name
     * or IPv4 literal (reference SimpleUrlValidator.java:54-80).
@@ -235,7 +410,7 @@ object UrlFunctions {
       if (proto != "http" && proto != "https") return false
       new URI(url) // must also be a valid URI
       val host = Option(u.getHost).getOrElse("").toLowerCase(java.util.Locale.ROOT)
-      HostnamePattern.matches(host) || Ipv4Pattern.matches(host)
+      HostnamePattern.matches(host) || isIpv4(host)
     } catch {
       case _: Exception => false
     }
@@ -298,6 +473,20 @@ object UrlFunctions {
     "co.il", "net.il", "org.il",
     "com.ru", "net.ru", "org.ru")
 
+  private def isIpv4(h: String): Boolean = {
+    var groups = 0
+    var digits = 0
+    var i = 0
+    while (i < h.length) {
+      val c = h.charAt(i)
+      if (isDigit(c)) { digits += 1; if (digits > 3) return false }
+      else if (c == '.' && digits > 0 && groups < 3) { groups += 1; digits = 0 }
+      else return false
+      i += 1
+    }
+    groups == 3 && digits > 0
+  }
+
   /** Paid-level domain: the registrable domain one label below the public
     * suffix ("www.foo.co.uk" -> "foo.co.uk"; "a.b.example.com" ->
     * "example.com"). IP literals and single-label hosts return unchanged.
@@ -305,19 +494,23 @@ object UrlFunctions {
   def extractPldFromHost(hostRaw: String): String = {
     if (hostRaw == null || hostRaw.isEmpty) return hostRaw
     val host = normalizeHostname(hostRaw)
-    if (Ipv4Pattern.matches(host)) return host
-    val labels = host.split("\\.")
-    if (labels.length <= 2) return host
-    val lastTwo = labels.takeRight(2).mkString(".")
-    if (MultiLabelSuffixes.contains(lastTwo) && labels.length >= 3)
-      labels.takeRight(3).mkString(".")
+    if (isIpv4(host)) return host
+    // the last two (three under a multi-label suffix) dot-separated
+    // labels; the hostname has no trailing dot
+    val d1 = host.lastIndexOf('.')
+    val d2 = if (d1 > 0) host.lastIndexOf('.', d1 - 1) else -1
+    if (d2 < 0) return host
+    val lastTwo = host.substring(d2 + 1)
+    if (MultiLabelSuffixes.contains(lastTwo))
+      host.substring(if (d2 > 0) host.lastIndexOf('.', d2 - 1) + 1 else 0)
     else lastTwo
   }
 
   /** PLD of a full URL; empty string when the URL has no parseable host. */
-  def extractPld(url: String): String =
-    try extractPldFromHost(new URL(url).getHost)
-    catch { case _: Exception => "" }
+  def extractPld(url: String): String = {
+    val p = parseUrl(url)
+    if (p == null) "" else extractPldFromHost(p.host)
+  }
 
   /** protocol://host[:port] (reference ValidUrl.java:128-135). */
   def urlWithoutPath(url: String): String =
@@ -422,35 +615,51 @@ object UrlFunctions {
     * of a registrable domain's URLs contiguously in a sorted archive
     * index and canonicalizes param order like the CDX index does.
     */
-  def surtKey(url: String): String =
-    try {
-      val u = new URL(url)
-      val labels = normalizeHostname(u.getHost).split("\\.")
-      // only the FIRST label is www-skipped, by prefix — the reference's
-      // startsWith("www") rule (CommonCrawlUrls.java:26): www2/www3
-      // variants fold onto the apex, accepting that a pathological
-      // wwwfoo.com folds too (faithful to the CDX convention)
-      val kept =
-        if (labels.length > 1 && labels.head.startsWith("www")) labels.tail
-        else labels
-      val reversed = kept.reverse.mkString(",")
-      // explicit DEFAULT ports fold away (domain.com:80 == domain.com)
-      val port =
-        if (u.getPort == -1 || u.getPort == u.getDefaultPort) ""
-        else ":" + u.getPort
-      val rawPath = Option(u.getPath).getOrElse("")
-      val path =
-        if (rawPath.isEmpty || rawPath == "/") "/"
-        else rawPath.toLowerCase(java.util.Locale.ROOT)
-          .replaceAll("/$", "")
-      val query = Option(u.getQuery).map { q =>
-        // reference: lowercase, sort by full param text, dedupe identical
-        "?" + q.toLowerCase(java.util.Locale.ROOT)
-          .split("&").distinct.sorted.mkString("&")
-      }.getOrElse("")
-      val frag = Option(u.getRef).map("#" + _).getOrElse("")
-      s"$reversed$port)$path$query$frag"
-    } catch { case _: Exception => url }
+  def surtKey(url: String): String = {
+    val u = parseUrl(url)
+    if (u == null || u.host == null) return url
+    val labels = normalizeHostname(u.host).split("\\.")
+    // only the FIRST label is www-skipped, by prefix — the reference's
+    // startsWith("www") rule (CommonCrawlUrls.java:26): www2/www3
+    // variants fold onto the apex, accepting that a pathological
+    // wwwfoo.com folds too (faithful to the CDX convention)
+    val kept =
+      if (labels.length > 1 && labels.head.startsWith("www")) labels.tail
+      else labels
+    val sb = new java.lang.StringBuilder(url.length + 2)
+    var k = kept.length - 1
+    while (k >= 0) {
+      sb.append(kept(k))
+      if (k > 0) sb.append(',')
+      k -= 1
+    }
+    // explicit DEFAULT ports fold away (domain.com:80 == domain.com)
+    if (u.port != -1 && u.port != u.defaultPort) sb.append(':').append(u.port)
+    sb.append(')')
+    val rawPath = if (u.path == null) "" else u.path
+    if (rawPath.isEmpty || rawPath == "/") sb.append('/')
+    else sb.append(dropTrailingSlash(rawPath.toLowerCase(java.util.Locale.ROOT)))
+    if (u.query != null) {
+      // reference: lowercase, sort by full param text, dedupe identical
+      sb.append('?').append(u.query.toLowerCase(java.util.Locale.ROOT)
+        .split("&").distinct.sorted.mkString("&"))
+    }
+    if (u.ref != null) sb.append('#').append(u.ref)
+    sb.toString
+  }
+
+  /** One `/` dropped where the regex `/$` finds it: at the very end, or
+    * before a final line terminator (`\r\n` counts as one).
+    */
+  private def dropTrailingSlash(s: String): String = {
+    val n = s.length
+    val at =
+      if (n >= 1 && s.charAt(n - 1) == '/') n - 1
+      else if (n >= 3 && s.charAt(n - 1) == '\n' && s.charAt(n - 2) == '\r') n - 3
+      else if (n >= 2 && isLineTerminator(s.charAt(n - 1))) n - 2
+      else -1
+    if (at >= 0 && s.charAt(at) == '/') s.substring(0, at) + s.substring(at + 1) else s
+  }
 
   // --------------------------------------------------------------------- hash
 
@@ -458,9 +667,10 @@ object UrlFunctions {
     * needs internal consistency for frontier keys (reference uses JOAAT,
     * utils/HashUtils.java:7-10 — any well-mixed 64-bit hash is equivalent).
     */
-  def urlHash64(s: String): Long = {
+  def urlHash64(s: String): Long = fnv1a64(s.getBytes(StandardCharsets.UTF_8))
+
+  def fnv1a64(bytes: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
-    val bytes = s.getBytes(StandardCharsets.UTF_8)
     var i = 0
     while (i < bytes.length) {
       h ^= (bytes(i) & 0xff).toLong
@@ -468,17 +678,5 @@ object UrlFunctions {
       i += 1
     }
     h
-  }
-
-  // ------------------------------------------------------------ registration
-
-  /** Register all scalar functions for SQL use. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.udf.register("normalize_url", (s: String) => normalizeUrl(s))
-    spark.udf.register("is_valid_url", (s: String) => isValidUrl(s))
-    spark.udf.register("extract_pld", (s: String) => extractPld(s))
-    spark.udf.register("url_without_path", (s: String) => urlWithoutPath(s))
-    spark.udf.register("url_hash64", (s: String) => urlHash64(s))
-    spark.udf.register("surt_key", (s: String) => surtKey(s))
   }
 }

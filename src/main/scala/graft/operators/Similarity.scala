@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 
 import graft.plans.VectorExpressions
@@ -149,11 +152,37 @@ object Similarity {
     * (a small parquet corpus coalesces to 1-2 splits — a parallelism
     * collapse for a compute kernel on top). A frame already at or above
     * defaultParallelism — a big index scanning wide — is never reshuffled
-    * (the shuffle would move every vector byte to save nothing).
+    * (the shuffle would move every vector byte to save nothing). The
+    * width is read off the planned physical plan ([[plannedPartitions]]),
+    * so no upstream stage runs to find it.
     */
-  private def spreadToSlots(df: DataFrame): DataFrame = {
+  private[graft] def spreadToSlots(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (plannedPartitions(df) < target) df.repartition(target) else df
+  }
+
+  /** The partition count of `df` from its planned physical plan: the
+    * splits of the scans that stream into it (a broadcast side does not).
+    * 0 when a shuffle feeds it, as AQE may coalesce that shuffle below
+    * its planned count; `df.rdd.getNumPartitions` would learn the true
+    * count only by running every upstream shuffle stage, work the real
+    * run then recomputes.
+    */
+  private def plannedPartitions(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    def streamed(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeLike => Nil
+      case leaf if leaf.children.isEmpty => Seq(leaf)
+      case _ => p.children.flatMap(streamed)
+    }
+    if (plan.exists(_.isInstanceOf[ShuffleExchangeLike])) 0
+    else streamed(plan).map {
+      case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+      case leaf => leaf.execute().getNumPartitions
+    }.sum
   }
 
   /** Per-partition exact top-K candidates for [[cosineTopK]]'s kernel

@@ -48,12 +48,12 @@ object TextOps {
   /** Distinct word k-shingles as a Scala UDF. Higher-order-function shingle
     * construction is interpreted (HOFs have no codegen) and was the
     * pipeline bottleneck (~5x slower); this is value-identical: same
-    * whitespace tokens, same first-occurrence distinct order.
+    * whitespace tokens ([[graft.plans.TextCodegen.shingles]]), same
+    * first-occurrence distinct order.
     */
   def shingleUdf(k: Int): UserDefinedFunction = udf { (text: String) =>
-    val toks = text.trim.split("\\s+")
-    if (toks.length < k) Array.empty[String]
-    else toks.sliding(k).map(_.mkString(" ")).toArray.distinct
+    graft.plans.TextCodegen.shingles(
+      org.apache.spark.unsafe.types.UTF8String.fromString(text), k)
   }
 
   /** Whole MinHash signature (tokens -> k-shingles -> 32-bit md5 hashes ->

@@ -21,32 +21,18 @@ import org.apache.spark.sql.functions._
   */
 object UrlQuality {
 
-  // scheme match is case-INSENSITIVE: 'HTTP://HOST/9999?a=1' must not
-  // extract an empty host/path (which would make every shape check pass
-  // vacuously — uppercase schemes are valid per RFC 3986 §3.1)
-  private def host(u: Column): Column =
-    regexp_extract(u, "(?i)^[a-z][a-z0-9+.-]*://([^/?#]+)", 1)
-  private def path(u: Column): Column =
-    regexp_extract(u, "(?i)^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-  private def query(u: Column): Column =
-    regexp_extract(u, "\\?([^#]*)", 1)
-
   /** The feature columns from a URL Column — ONE definition shared by
-    * [[features]] and [[gate]] (a per-caller re-derivation drifts).
-    * Pure Column composition: no SQL-string interpolation of the
-    * caller's column name, so exotic column names cannot break parsing.
+    * [[features]] and [[gate]] (a per-caller re-derivation drifts): the
+    * fields of one codegen'd `url_shape` kernel call
+    * ([[graft.plans.UrlCodegen.urlShape]]). Host and path follow a
+    * case-insensitive `scheme://` — 'HTTP://HOST/9999?a=1' must not get
+    * an empty host/path, which would make every shape check pass
+    * vacuously (uppercase schemes are valid per RFC 3986 §3.1).
     */
-  private def featuresOf(u: Column): Map[String, Column] = Map(
-    "url_len" -> length(u).cast("long"),
-    "n_host_labels" -> size(split(host(u), "\\.")).cast("long"),
-    "path_depth" ->
-      size(filter(split(path(u), "/"), x => x =!= "")).cast("long"),
-    "n_params" -> when(query(u) === "", 0L)
-      .otherwise(size(split(query(u), "&")).cast("long")),
-    // integer fixed-point percent; floor(a/b) == a div b for a,b >= 0
-    "digit_pct" -> floor(
-      (lit(100L) * length(regexp_replace(u, "[^0-9]", ""))) /
-        greatest(length(u), lit(1))).cast("long"))
+  private def featuresOf(u: Column): Map[String, Column] = {
+    val shape = graft.plans.UrlExpressions.url_shape(u)
+    graft.plans.UrlShapeExpr.Fields.map(n => n -> shape.getField(n)).toMap
+  }
 
   /** Per-URL structural features: length, host label count, path depth
     * (non-empty segments), query parameter count, digit percentage of
@@ -55,8 +41,7 @@ object UrlQuality {
   def features(df: DataFrame, urlCol: String): DataFrame = {
     val f = featuresOf(col(urlCol))
     df.select(col(urlCol).as("url") +:
-      Seq("url_len", "n_host_labels", "path_depth", "n_params", "digit_pct")
-        .map(n => f(n).as(n)): _*)
+      graft.plans.UrlShapeExpr.Fields.map(n => f(n).as(n)): _*)
   }
 
   /** Drop URLs whose shape exceeds any threshold — the insert-time gate.

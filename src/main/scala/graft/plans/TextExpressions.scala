@@ -104,18 +104,28 @@ object TextCodegen {
       dupWindows, 100 * dupWindows / math.max(n - w + 1, 1)))
   }
 
+  /** Distinct word k-shingles ("a b c") of a text in first-occurrence
+    * order, over the tokens of `split(trim(text), '\\s+')` as Spark and
+    * DuckDB split them ([[tokens]]).
+    */
+  def shingles(text: UTF8String, k: Int): Array[String] = {
+    val toks = tokens(text).map(_.toString)
+    if (toks.length < k) Array.empty[String]
+    else toks.sliding(k).map(_.mkString(" ")).toArray.distinct
+  }
+
   /** Whole signature for one document; `null` entries mean "no shingles"
     * (documents shorter than the shingle size), as the minimum of an empty
     * hash list is NULL in SQL.
     */
   def minhashSigArray(
-      text: String, shingleK: Int, numHashes: Int): Array[java.lang.Long] = {
-    val toks = text.trim.split("\\s+")
-    val shingles =
-      if (toks.length < shingleK) Array.empty[String]
-      else toks.sliding(shingleK).map(_.mkString(" ")).toArray.distinct
+      text: String, shingleK: Int, numHashes: Int): Array[java.lang.Long] =
+    minhashSigOf(UTF8String.fromString(text), shingleK, numHashes)
+
+  private def minhashSigOf(
+      text: UTF8String, shingleK: Int, numHashes: Int): Array[java.lang.Long] = {
     val md = md5.get()
-    val hs = shingles.map(sh => md5Hash32(md, sh.getBytes("UTF-8")))
+    val hs = shingles(text, shingleK).map(sh => md5Hash32(md, sh.getBytes("UTF-8")))
     Array.tabulate[java.lang.Long](numHashes) { j =>
       if (hs.isEmpty) null
       else {
@@ -136,7 +146,7 @@ object TextCodegen {
     * encoder round-trip, no UDF null-handling wrapper.
     */
   def minhashSig(s: UTF8String, shingleK: Int, numHashes: Int): ArrayData = {
-    val arr = minhashSigArray(s.toString, shingleK, numHashes)
+    val arr = minhashSigOf(s, shingleK, numHashes)
     val boxed = new Array[Any](arr.length)
     var i = 0
     while (i < arr.length) { boxed(i) = arr(i); i += 1 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.crawl.{RevisitPolicy, SnapshotDelta}
-import graft.functions.UrlFunctions
 import graft.operators.UrlStateMerger
+import graft.plans.UrlExpressions.{extract_pld, normalize_url, surt_key}
 import graft.schema.{FetchStatus => FS}
 
 /** Crawler-domain operators exercised over the driver's tables by
@@ -53,11 +53,11 @@ object Crawler {
       |  epoch_ms(o_orderdate) + 1000 AS nextFetchTime
       |FROM orders""".stripMargin
 
-  /** L2/L3 clean-URLs shape: normalize messy synthesized URLs via the
-    * normalize_url UDF; the oracle pins the exact expected canonical form.
+  /** L2/L3 clean-URLs shape: normalize messy synthesized URLs with the
+    * native normalize_url kernel; the oracle pins the exact expected
+    * canonical form.
     */
   def urlNormalize(spark: SparkSession, dir: String): DataFrame = {
-    UrlFunctions.registerAll(spark)
     t(spark, dir, "orders")
       .select(
         col("o_orderkey"),
@@ -73,8 +73,8 @@ object Crawler {
           .as("raw_url"))
       .select(
         col("o_orderkey"),
-        expr("normalize_url(raw_url)").as("url"),
-        expr("extract_pld(normalize_url(raw_url))").as("pld"))
+        normalize_url(col("raw_url")).as("url"),
+        extract_pld(normalize_url(col("raw_url"))).as("pld"))
   }
 
   val urlNormalizeSql: String =
@@ -224,13 +224,12 @@ object Crawler {
     * (the CommonCrawl CDX sort key), fully SQL-expressible on both sides.
     */
   def surtKeys(spark: SparkSession, dir: String): DataFrame = {
-    UrlFunctions.registerAll(spark)
     t(spark, dir, "orders")
       .select(
         col("o_orderkey"),
         concat(lit("http://www.d"), col("o_custkey") % 20, lit(".shop.com/o/"),
           col("o_orderkey"), lit("?x="), col("o_orderkey") % 7).as("url"))
-      .select(col("o_orderkey"), expr("surt_key(url)").as("surt"))
+      .select(col("o_orderkey"), surt_key(col("url")).as("surt"))
   }
 
   val surtKeysSql: String =

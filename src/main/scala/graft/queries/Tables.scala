@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** One table, read under the schema of its footer: no Spark job. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.util.ParquetRead(spark, Seq(s"$dir/$name.parquet"))
 
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -345,9 +345,8 @@ object Sinks {
     * (surt, ts), the property CDX binary-search lookup needs.
     */
   def cdxIndex(records: DataFrame, extraCols: Seq[Column] = Nil): DataFrame = {
-    val surt = udf((u: String) => graft.functions.UrlFunctions.surtKey(u))
     records.select(Seq(
-      surt(col("url")).as("surt"),
+      graft.plans.UrlExpressions.surt_key(col("url")).as("surt"),
       // CDX timestamps are defined as UTC; date_format renders wall time
       // in the SESSION timezone, so shift the instant first such that the
       // session-tz rendering shows the UTC wall clock — correct under any

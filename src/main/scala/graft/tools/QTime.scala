@@ -2,11 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Focused per-query timer for optimization iteration: same methodology
-  * as [[graft.Bench]] (codegen warmup at sf0.001, block/cache hygiene
-  * between queries, count() as the timed action) over a NAMED subset.
-  * Not part of the driver contract — graft.Bench stays the artifact of
-  * record.
+/** Focused per-query timer for optimization iteration: codegen warmup at
+  * sf0.001 and block/cache hygiene between queries, as [[graft.Bench]]
+  * does, over a NAMED subset. The timed action writes the whole result
+  * to Spark's `noop` sink, so every column is computed (a `count()`
+  * lets column pruning drop the projections a query defines).
   *
   * Args: <queryName>[,<queryName>...] [reps]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
@@ -34,8 +34,11 @@ object QTime {
       System.err.println(s"qtime-conf $k=$v") }
     spark.sparkContext.setLogLevel("WARN")
     val warmDir = "/root/testdata/sf0.001"
+    def run(n: String, dir: String): Unit =
+      graft.SparkEntry.queries(n)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, warmDir).count()
+      try run(n, warmDir)
       catch { case _: Throwable => }
     }
     graft.util.StageTimer.enabled = true
@@ -49,7 +52,7 @@ object QTime {
         drop()
         graft.util.StageTimer.drain()
         val t0 = System.nanoTime()
-        try spark.time(graft.SparkEntry.queries(n)(spark, sfDir).count())
+        try run(n, sfDir)
         catch { case e: Throwable =>
           System.err.println(s"qtime $n FAILED: ${e.getMessage}") }
         val sec = (System.nanoTime() - t0) / 1e9

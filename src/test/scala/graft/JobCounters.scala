@@ -39,3 +39,22 @@ final class JobsByTag extends SparkListener {
     case _ =>
   }
 }
+
+/** Spark jobs started from this thread while `body` runs. */
+object JobsDuring {
+  def apply[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val jobs = new JobsByTag
+    sc.addSparkListener(jobs)
+    sc.addJobTag(tag)
+    try {
+      val a = body
+      org.apache.spark.TestBus.drain(sc)
+      (a, jobs.counts(tag).jobs.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(jobs)
+    }
+  }
+}

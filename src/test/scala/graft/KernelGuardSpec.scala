@@ -121,4 +121,13 @@ class KernelGuardSpec extends AnyFunSuite {
     assert(fellBack == kernel,
       s"fallback diverged:\n got $fellBack\n want $kernel")
   }
+
+  test("spreadToSlots reads the width off the plan: no upstream stage runs") {
+    val corpus = (0L until 64L).map(i => (i % 8, Array(i.toFloat, 1.0f)))
+      .toDF("g", "embedding")
+      .groupBy("g").agg(first("embedding").as("embedding"))
+    val (spread, jobs) = JobsDuring(spark)(Similarity.spreadToSlots(corpus))
+    assert(jobs == 0)
+    assert(spread.count() == 8L)
+  }
 }

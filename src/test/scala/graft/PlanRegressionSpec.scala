@@ -444,4 +444,17 @@ class PlanRegressionSpec extends AnyFunSuite {
       plan.take(3000))
     assert(!plan.contains("CartesianProduct"), plan.take(3000))
   }
+
+  test("q14, q32, q91: URL work is native kernels, no UDF, regex or lambda") {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    Seq("q14_url_normalize", "q32_surt_key", "q91_url_quality").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val exprs = helper.collect(df.queryExecution.executedPlan) { case n => n }
+        .flatMap(_.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+        .toSet
+      val banned = Set("ScalaUDF", "RegExpExtract", "RegExpReplace", "LambdaFunction")
+      assert((exprs & banned).isEmpty, s"$q: ${exprs & banned}")
+    }
+  }
 }

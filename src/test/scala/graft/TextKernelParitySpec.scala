@@ -140,4 +140,28 @@ class TextKernelParitySpec extends AnyFunSuite {
     assertSameFrame(TextOps.gopherRepetition(docs, "doc_id", "text", 5),
       refGopherRepetition(docs, "doc_id", "text", 5))
   }
+
+  test("MinHash and the shingle UDF tokenize as split(trim(text), '\\s+')") {
+    val k = 2
+    val numHashes = 8
+    val ref = edgeDocs.filter(col("text").isNotNull).select(col("doc_id"),
+      expr(s"${TextOps.shinglesSql("text", k)}").as("sh"))
+      .select(col("doc_id"), col("sh"),
+        expr(s"transform(sh, s -> ${TextOps.hash32Sql("s")})").as("hs"))
+    val got = edgeDocs.filter(col("text").isNotNull).select(col("doc_id"),
+      TextOps.shingleUdf(k)(col("text")).as("sh"),
+      TextOps.minhashSigUdf(k, numHashes)(col("text")).as("sig"))
+    val want = ref.collect().map(r => r.getLong(0) -> r).toMap
+    got.collect().foreach { r =>
+      val w = want(r.getLong(0))
+      assert(r.getSeq[String](1) == w.getSeq[String](1), s"doc ${r.getLong(0)}")
+      val hs = w.getSeq[Long](2)
+      val sig = (0 until numHashes).map { j =>
+        val a = (j.toLong * 2654435761L + 1L) % 1000000007L
+        if (hs.isEmpty) null
+        else java.lang.Long.valueOf(hs.map(h => (a * h + j * 97L + 13L) % 1000000007L).min)
+      }
+      assert(r.getSeq[java.lang.Long](2) == sig, s"doc ${r.getLong(0)}")
+    }
+  }
 }

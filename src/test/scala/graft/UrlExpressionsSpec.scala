@@ -43,14 +43,15 @@ class UrlExpressionsSpec extends AnyFunSuite {
 
   test("runtime-registered SQL functions work and codegen survives volume") {
     UrlExpressions.register(spark)
+    UrlExpressions.register(spark) // a second call replaces nothing
     import spark.implicits._
     // enough rows to force whole-stage codegen paths, not just interpreted
     val n = (1 to 10000).map(i => s"http://d$i.example.com/p$i").toDF("url")
     n.createOrReplaceTempView("urls_native_test")
     val agg = spark.sql(
-      """SELECT count(distinct url_hash64_native(url)) AS dh,
-        |       count(distinct extract_pld_native(url)) AS dp,
-        |       count(normalize_url_native(url)) AS nn
+      """SELECT count(distinct url_hash64(url)) AS dh,
+        |       count(distinct extract_pld(url)) AS dp,
+        |       count(normalize_url(url)) AS nn
         |FROM urls_native_test""".stripMargin).collect().head
     assert(agg.getAs[Long]("dh") == 10000)
     assert(agg.getAs[Long]("dp") == 1) // all under example.com
@@ -95,9 +96,11 @@ class UrlExpressionsSpec extends AnyFunSuite {
       assert(ext ne spark, "sanity: must be a distinct session")
       val row = ext.sql(
         """SELECT
-          |  url_hash64_native('http://a.com/x') AS h,
-          |  normalize_url_native('HTTP://A.com/x') AS n,
-          |  extract_pld_native('http://sub.a.com/p') AS p,
+          |  url_hash64('http://a.com/x') AS h,
+          |  normalize_url('HTTP://A.com/x') AS n,
+          |  extract_pld('http://sub.a.com/p') AS p,
+          |  surt_key('http://www.a.com:80/X/?b=2&a=1') AS surt,
+          |  url_shape('http://a.b.com/x//y?p=1&q=2').path_depth AS depth,
           |  minhash_sig_native('a b c d e', 3, 4) AS sig,
           |  vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
           |          array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
@@ -109,8 +112,10 @@ class UrlExpressionsSpec extends AnyFunSuite {
       assert(row.getAs[Long]("h") == UrlFunctions.urlHash64("http://a.com/x"))
       assert(row.getAs[String]("n") == UrlFunctions.normalizeUrl("HTTP://A.com/x"))
       assert(row.getAs[String]("p") == "a.com")
+      assert(row.getAs[String]("surt") == "com,a)/x?a=1&b=2")
+      assert(row.getAs[Long]("depth") == 2L)
       val sig = graft.plans.TextCodegen.minhashSigArray("a b c d e", 3, 4).toSeq
-      assert(row.getSeq[Any](3) == sig)
+      assert(row.getSeq[Any](row.fieldIndex("sig")) == sig)
       assert(row.getAs[Double]("d") == 11.0)
       val b = row.getAs[Long]("b")
       assert(b >= 0 && b < 256, s"8-plane bucket out of range: $b")
