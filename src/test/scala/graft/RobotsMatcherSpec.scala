@@ -44,11 +44,11 @@ class RobotsMatcherSpec extends AnyFunSuite {
   test("longest match wins, ties go to Allow, across wildcard and anchor rules") {
     val rules = RobotsRules.parse(
       "User-agent: *\nDisallow: /private\nAllow: /private/ok\n" +
-        "Disallow: /tmp*.html$\nDisallow: /*.gif$\nAllow: /*.gif$\n")
+        "Disallow: /cache*.html$\nDisallow: /*.gif$\nAllow: /*.gif$\n")
     assert(!rules.isAllowed("/private/x"))
     assert(rules.isAllowed("/private/ok/page"))
-    assert(!rules.isAllowed("/tmp123.html"))
-    assert(rules.isAllowed("/tmp123.htmlx"))
+    assert(!rules.isAllowed("/cache123.html"))
+    assert(rules.isAllowed("/cache123.htmlx"))
     assert(rules.isAllowed("/a/b.gif"))
     assert(rules.isAllowed("/public/p1"))
   }
