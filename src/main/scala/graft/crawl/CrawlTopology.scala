@@ -1,8 +1,10 @@
 package graft.crawl
 
+import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.Platform
 
 import graft.functions.UrlFunctions
 import graft.operators.UrlStateMerger
@@ -104,16 +106,16 @@ final case class CrawlConfig(
     // threads instead of tasks. 1 = serial (deterministic test path).
     robotsThreads: Int = 10,
     fetchThreads: Int = 10,
-    // broadcast fence for the per-round domain state (domain clocks and
-    // scores / seenSitemaps — pld- or sitemap-cardinality frames):
-    // they ride broadcast joins because domain cardinality is normally
-    // millions at most, but at an extreme (100 M+ PLDs) a per-round
-    // broadcast is itself the bottleneck. Past this row count the round
-    // joins drop their broadcast hint and plan as partitioned joins —
-    // the same fence discipline the stores' tombstone anti-join uses
-    // (StoreProtocol's size switch). Cardinality is re-checked every
-    // `compactEvery` rounds (the domain count rides the state fold; the
-    // sitemap count is one amortized action, not a per-round one)
+    // broadcast fence for the sitemap round state (seenSitemaps, a
+    // sitemap-cardinality frame): it rides a broadcast anti-join because
+    // its cardinality is normally millions at most, but at an extreme
+    // (100 M+ PLDs) a per-round broadcast is itself the bottleneck. Past
+    // this row count (domains plus seen sitemaps) the join drops its
+    // broadcast hint and plans as a partitioned join — the same fence
+    // discipline the stores' tombstone anti-join uses (StoreProtocol's
+    // size switch). Cardinality is re-checked every `compactEvery` rounds
+    // (the domain count rides the seam pass; the sitemap count is one
+    // amortized action, not a per-round one)
     broadcastStateMaxRows: Long = 10000000L,
     // URL-shape quality gate at frontier-insert time (the RefinedWeb/C4
     // URL-filtering slot, operators.UrlQuality): trap-shaped URLs (deep
@@ -159,22 +161,22 @@ final case class CrawlResult(
   * (SURVEY.md §2.12): the reference's two `IterativeStream` feedback loops
   * (…/flinkcrawler/topology/CrawlTopologyBuilder.java:271-284,419-437)
   * become a driver-side micro-batch recurrence over a persisted frontier
-  * table. Each round:
+  * table. Each round is one partition-local pass — seam task p owns the
+  * frontier buckets b ≡ p (mod seamParts), as the reference's
+  * `UrlDBFunction` keeps each PLD's crawl DB in one subtask:
   *
-  *   frontier ── schedule (per-PLD + global top-K)
-  *     ── seam pass: robots gate → politeness rank → fetch → parse, one
-  *        task per pld partition (the reference's chained operators)
-  *     ── derive {statusUpdates, outlinks, sitemapUrls}
-  *     ── clean new URLs ── merge back into the frontier (UrlStateMerger)
-  *     ── fold the per-domain state (politeness clock + recent scores)
+  *   owned bucket files + owned WAL rows ── merge (UrlStateMerger)
+  *     ── schedule (per-PLD quota heap + global cut)
+  *     ── robots gate → politeness rank → fetch → parse
+  *     ── advance the owned domain state (politeness clock, scores)
+  *   then derive {statusUpdates, outlinks, sitemapUrls}, clean the new
+  *   URLs and append them to the WAL, one file per owner: outlinks cross
+  *   domains, so this write is where rows change partition.
   *
   * Scale notes: the per-round working set is bounded by `maxQueueSize`
-  * regardless of frontier size; the frontier itself only ever passes
-  * through hash aggregation on `url` (shuffle on the frontier key — the
-  * same partitioning every round, so AQE/locality reuse applies) and is
-  * lineage-truncated with localCheckpoint each round. At cluster scale the
-  * frontier would live as a parquet/Delta table bucketed by pld; the merge
-  * is the same `mergeFrontier` plan either way.
+  * regardless of frontier size, and no round shuffles store rows: each
+  * task reads its own bucket files. The only cross-domain values are the
+  * global score mean and the queue cut, both computed on the driver.
   */
 final case class Candidate(url: String, pld: String, score: Float)
 
@@ -218,6 +220,50 @@ final case class SeamRow(
     text: String = "", language: String = "",
     parsedMeta: Map[String, String] = Map.empty,
     outlinks: Seq[(String, Float)] = Seq.empty)
+
+/** One domain's round state, kept in the seam partition that owns the
+  * domain: the politeness clock (FetchUrlsFunction's domainKey ->
+  * nextFetchTime map, 0 = none — a domain whose crawl delay outlasts a
+  * round tick stays off the schedule until `nextAllowed`) and the
+  * focused-crawl feedback (the reference's DomainScore iteration,
+  * CrawlTopologyBuilder.java:419-423: the newest `scoreWindow`
+  * (round, page score) pairs, newest first).
+  */
+final case class DomainState(pld: String, nextAllowed: Long, scores: Seq[(Int, Float)]) {
+  def avg: Option[Double] =
+    if (scores.isEmpty) None else Some(scores.foldLeft(0.0)(_ + _._2) / scores.size)
+}
+
+/** One capture of a fetched page (adaptive recrawl's change history). */
+final case class Capture(url: String, ts: Long, fp: Long, capId: Long)
+
+/** One seam task's counts, summed by the pass's observation: the queue
+  * depth, the eligible rows, the frontier's domains, whether it fetched,
+  * the robots sitemap declarations, an upper bound on the new domains
+  * its outlinks add, and its domain state's size and score means.
+  */
+final case class PassTally(
+    queued: Long = 0L, eligible: Long = 0L, plds: Long = 0L, fetched: Long = 0L,
+    sitemaps: Long = 0L, outPlds: Long = 0L, domains: Long = 0L,
+    scored: Long = 0L, avgSum: Double = 0.0)
+
+/** One row out of a round's partition-local pass; exactly one field is
+  * set. The state rows (`front` — the in-memory frontier — `domain`,
+  * `capture`) stay in the partition that owns them and are the next
+  * round's input.
+  */
+final case class RoundRow(
+    seam: SeamRow = null, front: CrawlStateUrl = null,
+    domain: DomainState = null, capture: Capture = null, tally: PassTally = null)
+
+/** What every seam task of a round shares: the round clock, the global
+  * score mean, the global cut ((score, url) of the maxQueueSize-th best
+  * candidate when the queue would overflow), and the run's settings.
+  */
+private[crawl] final case class PassCtx(
+    now: Long, round: Int, globalAvg: Double, cut: Option[(Float, String)],
+    queueOpen: Boolean, keepFrontier: Boolean, fetch: Boolean,
+    scope: String, cfg: CrawlConfig)
 
 object CrawlTopology {
 
@@ -366,6 +412,187 @@ object CrawlTopology {
     }
   }
 
+  /** Sightings of one owner partition merged, plus its state rows:
+    * in-memory frontier rows, domain state and capture windows.
+    */
+  private final case class Owned(
+      merged: Vector[CrawlStateUrl],
+      domains: scala.collection.mutable.Map[String, DomainState],
+      captures: scala.collection.mutable.Map[String, Vector[Capture]])
+
+  private def own(state: Iterator[RoundRow], rows: Iterator[CrawlStateUrl]): Owned = {
+    val fronts = Vector.newBuilder[CrawlStateUrl]
+    val domains = scala.collection.mutable.HashMap.empty[String, DomainState]
+    val captures = scala.collection.mutable.HashMap.empty[String, Vector[Capture]]
+    state.foreach { r =>
+      if (r.front != null) fronts += r.front
+      else if (r.domain != null) domains(r.domain.pld) = r.domain
+      else if (r.capture != null)
+        captures(r.capture.url) = captures.getOrElse(r.capture.url, Vector.empty) :+ r.capture
+    }
+    Owned(UrlStateMerger.mergeAll(fronts.result().iterator ++ rows).toVector,
+      domains, captures)
+  }
+
+  /** The schedule of one owner partition — FetchQueue semantics: the
+    * eligible rows of domains whose politeness clock has passed, each
+    * domain's best `quota` by (score, url) through a bounded heap, and
+    * only the candidates at or above the round's global cut. Returns the
+    * candidates best first and the eligible-row count.
+    */
+  private def schedule(o: Owned, ctx: PassCtx): (Seq[Candidate], Long) = {
+    val cfg = ctx.cfg
+    // SKIPPED_DEFERRED rows re-arm once their (short) retry interval
+    // passes — the whole point of defer-vs-block: by then the robots
+    // cache's error TTL has expired and the rules get refetched. With a
+    // recrawl interval FETCHED pages re-arm too, at their estimated
+    // change interval under adaptive recrawl (fewer than two captures:
+    // the fixed cold-start interval)
+    def refetchDue(r: CrawlStateUrl): Boolean = cfg.recrawlIntervalMs.exists { interval =>
+      val every = cfg.adaptiveRecrawl.flatMap { case (minMs, maxMs) =>
+        o.captures.get(r.url).filter(_.size > 1).map(cs => RevisitPolicy.estIntervalMs(
+          cs.map(c => (c.ts, c.fp, c.capId)), minMs, maxMs))
+      }.getOrElse(interval)
+      r.status == FS.FETCHED && r.statusTime + every <= ctx.now
+    }
+    val eligible = o.merged.filter(r =>
+      ((r.status == FS.UNFETCHED || r.status == FS.SKIPPED_DEFERRED) &&
+        r.nextFetchTime <= ctx.now || refetchDue(r)) && r.score >= cfg.minFetchScore)
+    // focused crawling: a domain's fetch quota is its moving-average page
+    // score against the global mean (G1) — score-proportional
+    // scheduling, clamp [1, boost x base]; unscored domains get base
+    val base = cfg.maxUrlsPerDomainPerRound
+    def quota(pld: String): Int = o.domains.get(pld).flatMap(_.avg) match {
+      case Some(avg) if cfg.scoreAdaptive =>
+        val q = BigDecimal(base * avg / math.max(ctx.globalAvg, 0.01))
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toInt
+        math.max(1, math.min(cfg.maxQuotaBoost * base, q))
+      case _ => base
+    }
+    val key = (c: CrawlStateUrl) => (c.score, c.url)
+    val heaps = scala.collection.mutable.HashMap.empty[String, java.util.PriorityQueue[CrawlStateUrl]]
+    val worstFirst = bestFirst.on(key).reverse
+    eligible.foreach { r =>
+      if (o.domains.get(r.pld).forall(_.nextAllowed <= ctx.now)) {
+        val k = quota(r.pld)
+        if (k > 0) {
+          val h = heaps.getOrElseUpdate(r.pld, new java.util.PriorityQueue(k, worstFirst))
+          if (h.size < k) h.add(r)
+          else if (bestFirst.lt(key(r), key(h.peek()))) { h.poll(); h.add(r) }
+        }
+      }
+    }
+    val picked = heaps.valuesIterator.flatMap(h =>
+        scala.jdk.CollectionConverters.CollectionHasAsScala(h).asScala)
+      .filter(r => ctx.queueOpen && ctx.cut.forall(bestFirst.lteq(key(r), _)))
+      .toVector.sortBy(key)(bestFirst)
+    (picked.map(r => Candidate(r.url, r.pld, r.score)), eligible.size.toLong)
+  }
+
+  /** Advances one owner's state by its fetch rows of this round, one row
+    * at a time: the politeness clocks of delayed domains — from the
+    * latest actual fetch completion when wall-paced (fetchedAtMs is 0 on
+    * logical crawls and archive stages, so the max degrades to the round
+    * snapshot there) — each domain's newest `scoreWindow` parsed page
+    * scores (ParseFunction's score side output :102), and under adaptive
+    * recrawl each fetched page's newest `captureWindow` captures. The
+    * state stays O(domains x window + urls x captures), never O(pages
+    * crawled), and no page body is held past its own row.
+    */
+  private final class Advance(o: Owned, ctx: PassCtx) {
+    private val cfg = ctx.cfg
+    // pld -> (latest fetch completion, longest delay) of its delayed fetches
+    private val clocks = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+    private val scores = scala.collection.mutable.HashMap.empty[String, Vector[(Int, Float)]]
+    // the domains of the round's outlinks and redirect targets
+    private val outPlds = scala.collection.mutable.HashSet.empty[String]
+    private var fetched = 0L
+
+    def add(f: SeamRow): Unit = {
+      fetched += 1
+      if (f.crawlDelay > 0) {
+        val (at, delay) = clocks.getOrElse(f.pld, (0L, 0L))
+        clocks(f.pld) = (math.max(at, f.fetchedAtMs), math.max(delay, f.crawlDelay))
+      }
+      if (cfg.scoreAdaptive && f.parse == "ok" && f.score > 0.0f)
+        scores(f.pld) = scores.getOrElse(f.pld, Vector.empty) :+ ((ctx.round, f.score))
+      if (cfg.adaptiveRecrawl.isDefined && f.status == FS.FETCHED) {
+        val fp = XXH64.hashUnsafeBytes(
+          f.content, Platform.BYTE_ARRAY_OFFSET, f.content.length, 42L)
+        o.captures(f.url) = (o.captures.getOrElse(f.url, Vector.empty) :+
+          Capture(f.url, ctx.now, fp, ctx.round.toLong))
+          .sortBy(-_.capId).take(cfg.captureWindow)
+      }
+      (f.outlinks.iterator.map(_._1) ++ Iterator(f.redirectedTo).filter(_.nonEmpty))
+        .foreach(u => outPlds += UrlFunctions.extractPld(UrlFunctions.normalizeUrl(u)))
+    }
+
+    /** Apply the round to the domain state; the tally gains the fetch
+      * side: whether the task fetched, an upper bound on the new domains
+      * (distinct per task, summed over tasks) and the state's score means.
+      */
+    def finish(tally: PassTally): PassTally = {
+      def domain(pld: String) = o.domains.getOrElse(pld, DomainState(pld, 0L, Seq.empty))
+      clocks.foreach { case (pld, (at, delay)) =>
+        val d = domain(pld)
+        o.domains(pld) = d.copy(nextAllowed =
+          math.max(d.nextAllowed, math.max(at, ctx.now) + delay))
+      }
+      scores.foreach { case (pld, fresh) =>
+        val d = domain(pld)
+        o.domains(pld) = d.copy(scores =
+          (d.scores ++ fresh).sorted(newestFirst).take(cfg.scoreWindow))
+      }
+      val avgs = o.domains.valuesIterator.flatMap(_.avg).toVector
+      tally.copy(fetched = math.min(fetched, 1L), outPlds = outPlds.size,
+        domains = o.domains.size, scored = avgs.size, avgSum = avgs.sum)
+    }
+  }
+
+  private val newestFirst: Ordering[(Int, Float)] =
+    Ordering.Tuple2(Ordering.Int, Ordering.Float.TotalOrdering).reverse
+
+  /** The owner's state rows, then its tally. */
+  private def stateRows(o: Owned, tally: PassTally, ctx: PassCtx): Iterator[RoundRow] =
+    (if (ctx.keepFrontier) o.merged.iterator.map(r => RoundRow(front = r))
+     else Iterator.empty) ++
+      o.domains.valuesIterator.map(d => RoundRow(domain = d)) ++
+      o.captures.valuesIterator.flatten.map(c => RoundRow(capture = c)) ++
+      Iterator(RoundRow(tally = tally))
+
+  /** One owner partition's round: merge its sightings, schedule, run the
+    * robots gate and the in-round crawl-delay rank, then — unless a
+    * caller's fetch stage takes over — fetch and parse the cleared
+    * candidates through the task's pool (FetchUrlsFunction's thread
+    * pool: task wall ≈ Σ latencies / fetchThreads) and advance the
+    * owner's domain state in place. Seam rows stream out as they
+    * complete; the state rows and the tally follow.
+    */
+  private def ownerPass(state: Iterator[RoundRow], rows: Iterator[CrawlStateUrl],
+      ctx: PassCtx, robots: Fetcher, pages: Fetcher): Iterator[RoundRow] = {
+    val o = own(state, rows)
+    val (candidates, eligible) = schedule(o, ctx)
+    val (held, cleared) = gate(candidates.iterator, robots, ctx.scope, ctx.cfg)
+    val advance = new Advance(o, ctx)
+    val out =
+      if (!ctx.fetch) cleared.iterator.map(v => SeamRow(v.url, v.pld, v.score,
+        "allowed", "", v.crawlDelay, v.sitemaps))
+      else graft.util.Pooled.unordered(
+          cleared.iterator, ctx.cfg.fetchThreads, name = "fetch") { v =>
+          (fetchOne(pages, v, ctx.cfg.wallClockRounds), v.sitemaps)
+        }.map { case (f, sm) =>
+          val row = parseOne(f, sm, ctx.cfg)
+          advance.add(row)
+          row
+        }
+    val tally = PassTally(queued = candidates.size, eligible = eligible,
+      plds = o.merged.iterator.map(_.pld).toSet.size,
+      sitemaps = held.map(_.sitemaps.size.toLong).sum +
+        cleared.map(_.sitemaps.size.toLong).sum)
+    (held.iterator ++ out).map(s => RoundRow(seam = s)) ++
+      stateRows(o, advance.finish(tally), ctx)
+  }
+
   def run(
       spark: SparkSession,
       seeds: Seq[(String, Float)],
@@ -383,6 +610,7 @@ object CrawlTopology {
       // Defaults to the page fetcher.
       sitemapFetcher: Option[Fetcher] = None): CrawlResult = {
     import spark.implicits._
+    val sc = spark.sparkContext
 
     // namespaces the JVM-wide robots cache for this run (tests and long
     // -lived drivers run many topologies per JVM)
@@ -390,12 +618,13 @@ object CrawlTopology {
 
     // network-seam parallelism: the robots gate and the page fetch are
     // LATENCY-bound, so their task count must follow the cluster's slot
-    // count, not the data size — AQE sees a few hundred KB of candidate
-    // rows and coalesces an implicit shuffle to ONE partition, collapsing
-    // crawl concurrency from slots × fetchThreads to a single task's pool
-    // (LiveCrawlBench measured exactly fetchThreads in-flight before
-    // this). An EXPLICIT partition count is exempt from AQE coalescing.
-    val seamParts = spark.sparkContext.defaultParallelism
+    // count, not the data size. Seam partition p owns the frontier
+    // buckets b ≡ p (mod seamParts) under the store's own pld hash
+    // (FrontierStore.ownerOf): a round reads, merges, schedules, fetches
+    // and folds a domain's state in the one task that owns it
+    val seamParts = sc.defaultParallelism
+    val buckets = cfg.frontierBuckets
+    val hadoopConf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
 
     val gauges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
 
@@ -442,81 +671,90 @@ object CrawlTopology {
           rows.filter(ok)
       }
 
-    // merge the seeds (and any caller-held frontier) into the durable
-    // store when one is configured: a fresh run against a populated root
-    // RESUMES — already-FETCHED rows win the merge and are not refetched
-    val seedRows = shapeGate(0,
-      cleanUrls(spark, seeds.toDS(), 0L, cfg, lengthener).toDF())
-    val initialRows = initialFrontier.fold(seedRows)(f => f.unionByName(seedRows))
-    var frontier: DataFrame = null
+    // rows routed to the partition that owns their pld: the in-memory
+    // frontier's commits and a caller fetch stage's outcomes (HashPartitioner
+    // maps an Int key in [0, seamParts) to itself)
+    def route[T: scala.reflect.ClassTag](rows: org.apache.spark.rdd.RDD[T])(
+        pld: T => String) = org.apache.spark.rdd.RDD.rddToPairRDDFunctions(
+        rows.keyBy(r => FrontierStore.ownerOf(pld(r), buckets, seamParts)))
+      .partitionBy(new org.apache.spark.HashPartitioner(seamParts)).values
+    def aligned[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
+        rows: Seq[T]): Dataset[T] = spark.createDataset(sc.parallelize(rows, seamParts))
+
+    // the round state between passes: the last pass's state rows, each in
+    // the partition that owns it; in-memory mode also keeps its frontier
+    // there and routes each commit's rows to their owners (`pending`)
+    var state: Dataset[RoundRow] = aligned(Seq.empty[RoundRow])
+    var pending: Dataset[CrawlStateUrl] = aligned(Seq.empty[CrawlStateUrl])
     // WAL bookkeeping for the durable mode: each commit is one small
     // append; the bucketed fold runs every frontierCompactEvery commits
     // and once more at run end (so the at-rest store needs no replay)
     var walSeq: Long = cfg.frontierRoot
       .map(FrontierStore.nextWalSeq(spark, _)).getOrElse(0L)
     var walPending = 0
-    def commitFrontier(updates: DataFrame): DataFrame = cfg.frontierRoot match {
+    def commitFrontier(updates: DataFrame): Unit = cfg.frontierRoot match {
       case Some(root) =>
-        // durable round commit = ONE single-file WAL append (the full
+        // durable round commit = ONE WAL append routed by owner (the full
         // bucketed write cycle every round was the measured live-crawl
-        // limiter, PERF_NOTES r16/r17); the returned frame is the exact
-        // merged view over committed parquet — store resolved against
-        // the pending WAL with broadcast-sized joins, lineage O(WAL
-        // window) per round — and the crawl survives a driver restart
-        // at ANY point (manifest watermark makes replay exactly-once)
-        FrontierStore.appendWal(spark, root, updates, walSeq)
+        // limiter, PERF_NOTES r16/r17); the next pass reads each owner's
+        // bucket files and WAL rows in its own task, and the crawl
+        // survives a driver restart at ANY point (manifest watermark
+        // makes replay exactly-once)
+        FrontierStore.appendWal(spark, root, updates, walSeq, buckets, seamParts)
         walSeq += 1
         walPending += 1
         if (walPending >= math.max(1, cfg.frontierCompactEvery)) {
-          FrontierStore.compactWal(spark, root, cfg.frontierBuckets)
+          FrontierStore.compactWal(spark, root, buckets)
           walPending = 0
         }
-        FrontierStore.readResolved(spark, root)
-          .getOrElse(updates.limit(0))
       case None =>
-        // in-memory mode: merge the updates against the current frontier
-        // (null only for the very first commit, before any round ran)
-        val base = Option(frontier).fold(updates)(f => f.unionByName(updates))
-        UrlStateMerger.mergeFrontier(base).localCheckpoint(true)
+        pending = spark.createDataset(route(updates
+          .select(col("url"), col("pld"), col("status"), col("statusTime"),
+            col("score").cast("float").as("score"), col("nextFetchTime"))
+          .as[CrawlStateUrl].rdd)(_.pld)).localCheckpoint(true)
     }
-    frontier = commitFrontier(initialRows)
+    def owned() = cfg.frontierRoot.fold(pending.rdd)(
+      FrontierStore.ownedRows(spark, _, seamParts, buckets, hadoopConf))
+
+    // merge the seeds (and any caller-held frontier) into the durable
+    // store when one is configured: a fresh run against a populated root
+    // RESUMES — already-FETCHED rows win the merge and are not refetched
+    val seedRows = shapeGate(0,
+      cleanUrls(spark, seeds.toDS(), 0L, cfg, lengthener).toDF())
+    commitFrontier(initialFrontier.fold(seedRows)(f => f.unionByName(seedRows)))
     // journal THIS run's seeds, not the merged frontier — resuming
     // against a populated store would otherwise journal the whole store
     // (O(store) rows in the seed stage on every restart)
     journal(0, "seed", seedRows.select(col("url"), col("status")))
 
-    // per-domain round state, ONE pld-keyed frame folded once per round:
-    // the politeness clock (FetchUrlsFunction's domainKey -> nextFetchTime
-    // map — a domain whose crawl delay outlasts a round tick stays off the
-    // schedule until `nextAllowed`) and the focused-crawl feedback (the
-    // reference's DomainScore iteration, CrawlTopologyBuilder.java
-    // :419-423: the newest `scoreWindow` page scores, their mean `pldAvg`)
-    var domainState: DataFrame = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL("pld STRING, " +
-        "nextAllowed BIGINT, scores ARRAY<STRUCT<scoreRound: INT, " +
-        "pageScore: FLOAT>>, pldAvg DOUBLE"))
-    // observed on each fold: the mean pldAvg of the scored domains (the
+    // observed on each pass: the mean pldAvg of the scored domains (the
     // quota's global reference) and the domain count (broadcast fence)
     var (globalAvg, domainRows) = (0.0, 0L)
+    // an upper bound on the frontier's domains, None when unknown: while
+    // every domain's largest quota fits the queue, no global cut can bind
+    var pldBound: Option[Long] = None
+    val maxQuota =
+      if (cfg.scoreAdaptive) Seq(1, cfg.maxUrlsPerDomainPerRound,
+        cfg.maxQuotaBoost * cfg.maxUrlsPerDomainPerRound).max
+      else cfg.maxUrlsPerDomainPerRound
 
     // sitemaps fetched in ANY prior round (reference: sitemap state in the
     // UrlDB; without it an active domain's sitemap is refetched every
     // round for the crawl's lifetime)
     var seenSitemaps: DataFrame = Seq.empty[String].toDF("sitemapUrl")
 
-    // domain-state broadcast fence (CrawlConfig.broadcastStateMaxRows):
-    // true while the pld-keyed round state is broadcast-sized; flipped
-    // off permanently once its cardinality crosses the fence (domains
-    // only accumulate). Surfaced as the `domain_state_broadcast` gauge.
+    // broadcast fence (CrawlConfig.broadcastStateMaxRows): true while the
+    // round state is broadcast-sized; flipped off permanently once its
+    // cardinality crosses the fence (domains only accumulate). Surfaced
+    // as the `domain_state_broadcast` gauge.
     var broadcastDomainState = true
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (broadcastDomainState) broadcast(df) else df
 
-    // capture history feeding adaptive recrawl (url, capture time, body
-    // hash, round) — pruned to the newest captureWindow rows per URL
-    var captureHistory: DataFrame = Seq.empty[(String, Long, Long, Long)]
-      .toDF("url", "ts", "fp", "capId")
+    val tallyCols = Seq("queued", "eligible", "plds", "fetched", "sitemaps",
+      "outPlds", "domains", "scored", "avgSum").map(f => sum(col(s"tally.$f")).as(f))
+    def stateOf(out: Dataset[RoundRow]) =
+      out.filter(col("seam").isNull && col("tally").isNull).as[RoundRow]
 
     var round = 0
     var active = true
@@ -529,123 +767,82 @@ object CrawlTopology {
         else round * cfg.roundTickMs
 
       // --- schedule: FetchQueue semantics (per-domain fairness + global
-      // top-K by score with min-score gate; UrlDBFunction/FetchQueue)
-      val rawEligible = {
-        // SKIPPED_DEFERRED rows re-arm once their (short) retry interval
-        // passes — the whole point of defer-vs-block: by then the robots
-        // cache's error TTL has expired and the rules get refetched
-        val base = frontier.filter(
-          (col("status") === FS.UNFETCHED ||
-            col("status") === FS.SKIPPED_DEFERRED) &&
-            col("nextFetchTime") <= now)
-        val refetch = cfg.recrawlIntervalMs.map { interval =>
-          val f = frontier.filter(col("status") === FS.FETCHED)
-          cfg.adaptiveRecrawl match {
-            case Some((minMs, maxMs)) =>
-              // per-URL interval from observed change history: a page
-              // seen to change often re-arms at its estimated change
-              // interval; a static one backs off toward maxMs. Fewer
-              // than two captures -> the fixed cold-start interval.
-              val sched = RevisitPolicy.schedule(captureHistory,
-                  "url", "ts", "fp", "capId", minMs, maxMs)
-                .select(col("url"), col("n_captures"),
-                  col("est_interval_ms"))
-              f.join(sched, Seq("url"), "left")
-                .filter(col("statusTime") + coalesce(
-                  when(col("n_captures") > 1, col("est_interval_ms")),
-                  lit(interval)) <= now)
-                .drop("n_captures", "est_interval_ms")
-            case None =>
-              f.filter(col("statusTime") + interval <= now)
-          }
+      // top-K by score with min-score gate; UrlDBFunction/FetchQueue),
+      // partition-local. The global maxQueueSize cut is the one
+      // cross-domain step: when the domain bound cannot rule it out, a
+      // schedule-only pass finds the maxQueueSize-th best candidate first
+      val ctx0 = PassCtx(now, round, globalAvg, None, cfg.maxQueueSize > 0,
+        keepFrontier = cfg.frontierRoot.isEmpty, fetch = fetchStage.isEmpty,
+        crawlRunId, cfg)
+      val ctx =
+        if (pldBound.exists(_ * maxQuota <= cfg.maxQueueSize)) ctx0
+        else {
+          val best = spark.createDataset(state.rdd.zipPartitions(owned()) {
+              (st, rows) => schedule(own(st, rows), ctx0)._1.iterator
+            }).orderBy(col("score").desc, col("url").asc)
+            .limit(math.min(cfg.maxQueueSize.toLong + 1, Int.MaxValue).toInt).collect()
+          if (best.length <= cfg.maxQueueSize) ctx0
+          else ctx0.copy(cut = best.lift(cfg.maxQueueSize - 1).map(c => (c.score, c.url)))
         }
-        refetch.fold(base)(r => base.unionByName(r))
-          .filter(col("score") >= cfg.minFetchScore)
-      }
-      // focused crawling: a domain's fetch quota is its moving-average
-      // page score against the global mean (G1) — score-proportional
-      // scheduling, clamp [1, boost x base]; unscored domains get base
-      val baseQuota = cfg.maxUrlsPerDomainPerRound
-      val quota =
-        if (!cfg.scoreAdaptive) lit(baseQuota)
-        else when(col("pldAvg").isNotNull, greatest(lit(1), least(
-            lit(cfg.maxQuotaBoost * baseQuota),
-            org.apache.spark.sql.functions.round(lit(baseQuota) *
-              col("pldAvg") / lit(math.max(globalAvg, 0.01))).cast("int"))))
-          .otherwise(lit(baseQuota))
-      val perDomain =
-        Window.partitionBy(col("pld")).orderBy(col("score").desc, col("url").asc)
-      // G5 gauge via the observe() API: queue depth rides the checkpoint
-      // action for free — no second pass over candidates
-      val queueObs = org.apache.spark.sql.Observation(s"queue_r$round")
-      val candidates = rawEligible
-        .join(maybeBroadcast(domainState.select("pld", "nextAllowed", "pldAvg")),
-          Seq("pld"), "left")
-        .filter(coalesce(col("nextAllowed"), lit(0L)) <= now)
-        .withColumn("rn", row_number().over(perDomain))
-        .filter(col("rn") <= quota)
-        .orderBy(col("score").desc, col("url").asc)
-        .limit(cfg.maxQueueSize)
-        .select(col("url"), col("pld"), col("score"))
-        .observe(queueObs, count(lit(1)).as("n"))
-        .as[Candidate]
-        .localCheckpoint(true)
-      val queueDepth = Observed.long(queueObs, "n")
-      gauges += ((round, "urls_in_queue", queueDepth))
 
-      // emptiness rides the queue observation — a separate isEmpty action
-      // per round was part of the fixed driver overhead LiveCrawlBench
-      // measured (PERF_NOTES round-16)
+      // --- seam pass: ONE task per owner partition reads its frontier
+      // rows, schedules, runs robots gate → politeness rank → fetch →
+      // parse and advances its domain state, with no exchange before the
+      // fetch. Politeness is enforced before the pool — the schedule's
+      // per-domain cap, then the gate's crawl-delay rank — so it never
+      // hits one host harder than the schedule allows. The queue depth,
+      // the sitemap count, the fetching task count and the domain state's
+      // global mean ride the ONE checkpoint as observed metrics
+      val passObs = org.apache.spark.sql.Observation(s"queue_r$round")
+      val out = spark.createDataset(state.rdd.zipPartitions(owned()) {
+          (st, rows) => ownerPass(st, rows, ctx, robotsFetcher, pageFetcher)
+        }).observe(passObs, tallyCols.head, tallyCols.tail: _*)
+        .localCheckpoint(true)
+      val queueDepth = Observed.long(passObs, "queued")
+      gauges += ((round, "urls_in_queue", queueDepth))
+      state = stateOf(out)
+      pending = aligned(Seq.empty[CrawlStateUrl])
+      // the observation that saw the owners' state after this round
+      var foldObs = passObs
+      pldBound = Some(Observed.long(passObs, "plds"))
+
       if (queueDepth == 0L) {
         // distinguish "frontier exhausted" from "all ready domains are
         // inside their politeness window" — the latter just skips a tick;
         // continuous mode (recrawl) never self-terminates: pages re-arm
-        if (rawEligible.isEmpty && cfg.recrawlIntervalMs.isEmpty)
+        if (Observed.long(passObs, "eligible") == 0L && cfg.recrawlIntervalMs.isEmpty)
           active = false
       } else {
-        // --- seam pass: robots gate → politeness rank → fetch → parse in
-        // ONE task per pld partition (seamParts of them, see above), the
-        // reference's chained operators. The fetch drain is pooled
-        // (FetchUrlsFunction's thread pool): task wall ≈ Σ latencies /
-        // fetchThreads. Politeness is enforced before it — the schedule's
-        // per-domain cap, then the gate's crawl-delay rank — so the pool
-        // never hits one host harder than the schedule allows.
-        def pass(fetch: Boolean): Dataset[SeamRow] = candidates
-          .repartition(seamParts, col("pld"))
-          .mapPartitions { it =>
-            val (held, cleared) = gate(it, robotsFetcher, crawlRunId, cfg)
-            held.iterator ++ (
-              if (!fetch) cleared.iterator.map(v => SeamRow(v.url, v.pld,
-                v.score, "allowed", "", v.crawlDelay, v.sitemaps))
-              else graft.util.Pooled.unordered(
-                  cleared.iterator, cfg.fetchThreads, name = "fetch") { v =>
-                  (fetchOne(pageFetcher, v, cfg.wallClockRounds), v.sitemaps)
-                }.map { case (f, sm) => parseOne(f, sm, cfg) })
-          }
-        val seamObs = org.apache.spark.sql.Observation()
-        val seam = (fetchStage match {
-          case None => pass(fetch = true)
+        val gated = out.filter(col("seam").isNotNull).select("seam.*")
+        val seam = fetchStage match {
+          case None => gated
           case Some(stage) =>
             // a caller's fetch stage is a Dataset function: it reads the
-            // gate's pinned output, and its outcomes parse in a narrow
-            // map inside the seam checkpoint's job
-            val gated = pass(fetch = false).localCheckpoint(true)
-            gated.union(stage(gated.filter(_.stage == "allowed").map(v =>
-                RobotsVerdict(v.url, v.pld, v.score, "ALLOWED", v.crawlDelay,
-                  v.sitemaps)))
-              .map(parseOne(_, Seq.empty, cfg)))
-        }).withColumn("task", spark_partition_id())
-          // the sitemap declarations and the seam's fetching task count
-          // ride the ONE checkpoint as observed metrics; every later
-          // frame of the round derives from it
-          .observe(seamObs, sum(size(col("sitemaps"))).as("nsm"), size(
-            collect_set(when(col("stage") === "fetch", col("task")))).as("tasks"))
-          .localCheckpoint(true)
-        val sitemapCount = Observed.long(seamObs, "nsm")
+            // gate's pinned output; its outcomes parse in a narrow map,
+            // then route to their owners, which advance their state
+            val outcomes = stage(gated.filter(col("stage") === "allowed").as[SeamRow]
+                .map(v => RobotsVerdict(v.url, v.pld, v.score, "ALLOWED",
+                  v.crawlDelay, v.sitemaps)))
+              .map(parseOne(_, Seq.empty, cfg))
+              .localCheckpoint(true)
+            val advObs = org.apache.spark.sql.Observation()
+            val advanced = spark.createDataset(state.rdd.zipPartitions(
+                route(outcomes.rdd)(_.pld)) { (st, rows) =>
+                val o = own(st, Iterator.empty)
+                val advance = new Advance(o, ctx)
+                rows.foreach(advance.add)
+                stateRows(o, advance.finish(PassTally()), ctx)
+              }).observe(advObs, tallyCols.head, tallyCols.tail: _*)
+              .localCheckpoint(true)
+            state = stateOf(advanced)
+            foldObs = advObs
+            gated.unionByName(outcomes.toDF())
+        }
         // seam-shape gauge: the tasks that fetched — at 1 the crawl
         // concurrency has collapsed to a single pool (the AQE-coalescing
         // failure LiveCrawlBench exists to catch)
-        gauges += ((round, "fetch_tasks", Observed.long(seamObs, "tasks")))
+        gauges += ((round, "fetch_tasks", Observed.long(foldObs, "fetched")))
+        val sitemapCount = Observed.long(passObs, "sitemaps")
         def stageRows(stage: String) = seam.filter(col("stage") === stage)
         journal(round, "robots", stageRows("robots").select(col("url"), col("status")))
 
@@ -720,27 +917,6 @@ object CrawlTopology {
             lit(now).as("fetchTimeMs"), col("redirectedTo")))
         }
 
-        // fold this round's captures into the change history (adaptive
-        // recrawl): body hash per successful fetch, newest captureWindow
-        // rows kept per URL so the fold is O(active URLs x window)
-        if (cfg.adaptiveRecrawl.isDefined) {
-          val caps = fetched.filter(col("status") === FS.FETCHED)
-            .select(col("url"), lit(now).as("ts"),
-              xxhash64(col("content")).as("fp"),
-              lit(round.toLong).as("capId"))
-          val capRecency = Window.partitionBy(col("url")).orderBy(col("capId").desc)
-          // LAZY checkpoint: the lineage truncates at first
-          // materialization — inside the NEXT round's consuming job —
-          // instead of costing a separate driver action now. The fold
-          // derives only from eagerly-checkpointed parents, so a
-          // recompute before the cache lands is deterministic.
-          captureHistory = captureHistory.unionByName(caps)
-            .withColumn("__cr", row_number().over(capRecency))
-            .filter(col("__cr") <= cfg.captureWindow)
-            .drop("__cr")
-            .localCheckpoint(false)
-        }
-
         journal(round, "parse_failed",
           fetched.filter(col("parse") === "failed")
             .select(col("url"), lit(FS.ERROR_PARSE).as("status")))
@@ -757,36 +933,6 @@ object CrawlTopology {
         }
         journal(round, "parse",
           parsedOut.select(col("url"), lit(FS.FETCHED).as("status")))
-
-        // --- domain-state fold: advance the politeness clocks of delayed
-        // domains — from the latest actual fetch completion when
-        // wall-paced (fetchedAtMs is 0 on logical crawls and archive
-        // stages, so greatest() degrades to the round snapshot there) —
-        // and keep each domain's newest `scoreWindow` page scores
-        // (ParseFunction's score side output :102), so the state is
-        // O(domains x window), never O(pages crawled)
-        val newScores =
-          if (!cfg.scoreAdaptive) Seq.empty
-          else Seq(parsedOut.select(col("pld"), array(struct(
-            lit(round).as("scoreRound"),
-            col("score").as("pageScore"))).as("scores")))
-        val stateObs = org.apache.spark.sql.Observation()
-        domainState = (fetched.filter(col("crawlDelay") > 0)
-            .select(col("pld"), col("fetchedAtMs"), col("crawlDelay")) +: newScores)
-          .foldLeft(domainState)(_.unionByName(_, allowMissingColumns = true))
-          .groupBy(col("pld"))
-          .agg(greatest(max(col("nextAllowed")),
-              greatest(max(col("fetchedAtMs")), lit(now)) +
-                max(col("crawlDelay"))).as("nextAllowed"),
-            slice(sort_array(flatten(collect_list(col("scores"))), asc = false),
-              1, cfg.scoreWindow).as("scores"))
-          .withColumn("pldAvg", when(size(col("scores")) > 0,
-            aggregate(col("scores"), lit(0.0), (acc, s) => acc + s("pageScore")) /
-              size(col("scores"))))
-          .observe(stateObs, avg(col("pldAvg")).as("gavg"), count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        globalAvg = Observed.number(stateObs, "gavg").doubleValue()
-        domainRows = Observed.long(stateObs, "n")
 
         // --- close the loop: clean new URLs, merge everything
         // (the 4-way union at CrawlTopologyBuilder.java:433-437)
@@ -813,12 +959,19 @@ object CrawlTopology {
             (lit(now) + when(col("stage") === "fetch", fetchDelay)
               .when(col("status") === FS.SKIPPED_DEFERRED, lit(cfg.deferRetryMs))
               .otherwise(lit(cfg.deferBlockedMs))).as("nextFetchTime"))
-        frontier = commitFrontier(statusUpdates.unionByName(newUrls))
+        commitFrontier(statusUpdates.unionByName(newUrls))
+        pldBound =
+          if (sitemapCount > 0 || lengthener.isDefined) None
+          else pldBound.map(_ + Observed.long(foldObs, "outPlds"))
         // a round that scheduled work is "activity" for idle-based
         // terminators (reference NoActivityCrawlTerminator); rounds that
         // only tick politeness clocks are not
         cfg.terminator.foreach(_.reportActivity())
       }
+      val scored = Observed.long(foldObs, "scored")
+      globalAvg =
+        if (scored == 0L) 0.0 else Observed.number(foldObs, "avgSum").doubleValue() / scored
+      domainRows = Observed.long(foldObs, "domains")
       // flat per-round wall time is the long-crawl invariant the journal
       // compaction / score pruning / seen-sitemaps state exist to hold;
       // surfacing it as a gauge lets benches assert it directly
@@ -835,13 +988,17 @@ object CrawlTopology {
 
     // fold any WAL tail into the bucketed table: the at-rest store reads
     // whole through FrontierStore.read (no replay needed), and the final
-    // returned frontier references no WAL files
-    cfg.frontierRoot.foreach { root =>
-      if (walPending > 0) {
-        FrontierStore.compactWal(spark, root, cfg.frontierBuckets)
-        frontier = FrontierStore.read(spark, root)
-          .getOrElse(frontier)
-      }
+    // returned frontier references no WAL files. In-memory mode merges
+    // the last commit into the owners' frontier rows
+    val frontier = cfg.frontierRoot match {
+      case Some(root) =>
+        if (walPending > 0) FrontierStore.compactWal(spark, root, buckets)
+        FrontierStore.read(spark, root)
+          .getOrElse(spark.emptyDataset[CrawlStateUrl].toDF())
+      case None =>
+        spark.createDataset(state.rdd.zipPartitions(pending.rdd) { (st, rows) =>
+          UrlStateMerger.mergeAll(st.filter(_.front != null).map(_.front) ++ rows)
+        }).toDF().localCheckpoint(true)
     }
 
     // the run's robots entries are unreachable once the scope retires —

@@ -1,11 +1,18 @@
 package graft.crawl
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SerializableWritable
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.UrlStateMerger
 import graft.plans.UrlExpressions.extract_pld
+import graft.schema.CrawlStateUrl
 import graft.util.ParquetRead
 
 /** Durable frontier storage: the crawl DB as a pld-bucketed parquet table
@@ -46,6 +53,20 @@ object FrontierStore {
 
   private def bucketOf(buckets: Int) =
     pmod(xxhash64(col("pld")), lit(buckets)).cast("int")
+
+  /** [[bucketOf]] for one pld: Spark's `xxhash64` (seed 42) mod `buckets`. */
+  def bucketOf(pld: String, buckets: Int): Int = {
+    val h = if (pld == null) 42L
+      else XXH64.hashUTF8String(UTF8String.fromString(pld), 42L)
+    (((h % buckets) + buckets) % buckets).toInt
+  }
+
+  /** The partition of `parts` that owns `pld`: partition p owns the
+    * buckets b ≡ p (mod parts), so a crawl round reads, merges and
+    * schedules a domain's rows in one task with no exchange.
+    */
+  def ownerOf(pld: String, buckets: Int, parts: Int): Int =
+    bucketOf(pld, buckets) % parts
 
   def latestVersion(spark: SparkSession, root: String): Option[Int] = {
     val f = fs(spark, root)
@@ -429,10 +450,12 @@ object FrontierStore {
   // (merge read + B small parquet files + sidecars) every round — the
   // fixed per-round cost LiveCrawlBench measured as the live-crawl
   // throughput limiter. The WAL makes the round commit ONE small
-  // single-file parquet append; the bucketed fold runs every
-  // `frontierCompactEvery` rounds instead. Readers get the exact merged
-  // view via [[readResolved]] (store ∪ pending WAL, resolved with
-  // broadcast-sized joins — the big store side is never shuffled).
+  // parquet append, routed by owner partition; the bucketed fold runs
+  // every `frontierCompactEvery` rounds instead. A crawl round reads
+  // each owner's bucket files and WAL rows in its own task
+  // ([[ownedRows]]); other readers get the exact merged view via
+  // [[readResolved]] (store ∪ pending WAL, resolved with broadcast-sized
+  // joins — the big store side is never shuffled).
   // Exactly-once across crashes: the manifest's `wal <seq>` watermark
   // records the highest folded batch; replay skips batches at or below
   // it, so a crash between the fold commit and the WAL deletes cannot
@@ -477,14 +500,114 @@ object FrontierStore {
   }
 
   /** Durably append one round's updates (CrawlStateUrl rows) as WAL
-    * batch `seq`: ONE small parquet file, one write job. Overwrite mode
-    * reclaims a torn dir a crashed attempt at this seq left behind.
+    * batch `seq`, routed to their owners: ONE write task splits the rows
+    * into one small file per owner partition ([[ownerOf]] under
+    * `buckets` and `parts`) under `w<seq>/parts=<parts>/owner=<p>`, with
+    * no shuffle. Overwrite mode reclaims a torn dir a crashed attempt at
+    * this seq left behind.
     */
   def appendWal(
       spark: SparkSession, root: String, updates: DataFrame,
-      seq: Long): Unit =
-    updates.coalesce(1).write.mode("overwrite")
+      seq: Long, buckets: Int = 64, parts: Int = 1): Unit =
+    updates
+      .withColumn("parts", lit(parts))
+      .withColumn("owner", pmod(bucketOf(buckets), lit(parts)))
+      .coalesce(1)
+      .write.mode("overwrite").partitionBy("parts", "owner")
       .parquet(new Path(walDirPath(root), s"w$seq").toString)
+
+  /** The rows of WAL batches in one scan of their leaf dirs: a batch
+    * routed by owner keeps its files under `parts=<n>/owner=<p>`.
+    */
+  private def readWal(spark: SparkSession, batches: Seq[(Long, Path)]): DataFrame = {
+    val f = fs(spark, batches.head._2.toString)
+    def subdirs(p: Path) = f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+    ParquetRead(spark, batches.flatMap { case (_, batch) =>
+      val routed = subdirs(batch).filter(_.getName.startsWith("parts="))
+      if (routed.isEmpty) Seq(batch.toString) else routed.flatMap(subdirs).map(_.toString)
+    })
+  }
+
+  /** The frontier's rows partitioned by owner: partition p of the result
+    * holds the rows of the bucket files b ≡ p (mod `parts`) in the current
+    * manifest plus owner p's rows of every pending WAL batch, unmerged,
+    * read inside the task that owns them (no shuffle). A batch routed
+    * for another partition count is read by every task and filtered.
+    * `buckets` must be the store's bucket count, as for [[mergeInto]].
+    */
+  def ownedRows(
+      spark: SparkSession, root: String, parts: Int, buckets: Int,
+      conf: Broadcast[SerializableWritable[Configuration]]): RDD[CrawlStateUrl] = {
+    val f = fs(spark, root)
+    val (storeBuckets, manifest, wm) = latestVersion(spark, root)
+      .map { v => val m = readManifest(spark, root, v); (m._1, m._2, m._4) }
+      .getOrElse((buckets, Map.empty[Int, String], -1L))
+    require(storeBuckets == buckets,
+      s"store at $root was built with $storeBuckets buckets; owning its " +
+        s"rows by $buckets would split per-URL state across partitions")
+    val wal = walBatches(f, root).filter(_._1 > wm).map(_._2)
+    val owned = (0 until parts).map { p =>
+      manifest.toSeq.sortBy(_._1).collect {
+        case (b, tok) if b % parts == p => (bucketLoc(root, b, tok), false)
+      } ++ wal.map { batch =>
+        val routed = new Path(batch, s"parts=$parts")
+        if (f.exists(routed)) (new Path(routed, s"owner=$p").toString, false)
+        else (batch.toString, true)
+      }
+    }
+    spark.sparkContext.parallelize(owned, parts).mapPartitionsWithIndex {
+      (p, dirs) => dirs.flatten.flatMap { case (dir, filter) =>
+        val rows = readDir(conf.value.value, dir)
+        if (filter) rows.filter(r => ownerOf(r.pld, buckets, parts) == p)
+        else rows
+      }
+    }
+  }
+
+  /** Every CrawlStateUrl row of the parquet files under `dir` (none when
+    * it does not exist), through parquet-hadoop's record reader. The
+    * score may be stored as float, double or decimal.
+    */
+  private def readDir(conf: Configuration, dir: String): Iterator[CrawlStateUrl] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val d = new Path(dir)
+    val dfs = d.getFileSystem(conf)
+    if (!dfs.exists(d)) return Iterator.empty
+    val files = dfs.listFiles(d, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter { p =>
+        val n = p.getName
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.flatMap { file =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), file)
+          .withConf(conf).build()
+        def str(g: Group, c: String) =
+          if (g.getFieldRepetitionCount(c) == 0) null else g.getString(c, 0)
+        def score(g: Group): Float = {
+          val t = g.getType.getType("score").asPrimitiveType
+          val scale = t.getLogicalTypeAnnotation match {
+            case d: DecimalLogicalTypeAnnotation => d.getScale
+            case _ => 0
+          }
+          t.getPrimitiveTypeName match {
+            case FLOAT => g.getFloat("score", 0)
+            case DOUBLE => g.getDouble("score", 0).toFloat
+            case INT32 => BigDecimal(g.getInteger("score", 0), scale).toFloat
+            case INT64 => BigDecimal(g.getLong("score", 0), scale).toFloat
+            case _ => BigDecimal(BigInt(g.getBinary("score", 0).getBytes), scale).toFloat
+          }
+        }
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+          CrawlStateUrl(str(g, "url"), str(g, "pld"), str(g, "status"),
+            g.getLong("statusTime", 0), score(g), g.getLong("nextFetchTime", 0))
+        }.toVector.iterator
+        finally reader.close()
+      }
+  }
 
   /** The exact merged frontier: bucketed store resolved against the
     * pending WAL batches. The store side passes through broadcast-sized
@@ -500,9 +623,7 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     val stored = read(spark, root)
-    val wal =
-      if (pending.isEmpty) None
-      else Some(ParquetRead(spark, pending.map(_._2.toString)))
+    val wal = if (pending.isEmpty) None else Some(readWal(spark, pending))
     (stored, wal) match {
       case (None, None) => None
       case (Some(s), None) => Some(s)
@@ -530,8 +651,7 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     if (pending.nonEmpty) {
-      val updates = ParquetRead(spark, pending.map(_._2.toString))
-      mergeInto(spark, root, updates, buckets,
+      mergeInto(spark, root, readWal(spark, pending), buckets,
         walWatermark = Some(pending.map(_._1).max))
     }
     // reclaim everything the (possibly advanced) watermark now covers

@@ -82,6 +82,20 @@ object RevisitPolicy {
       .withColumn("next_fetch_ms", col("last_ts") + col("est_interval_ms"))
   }
 
+  /** [[schedule]]'s `est_interval_ms` for one url's captures in memory:
+    * (ts, fingerprint, tie) triples in any order. The crawl round runs
+    * this on the capture window kept in the url's owner partition.
+    */
+  def estIntervalMs(
+      captures: Seq[(Long, Long, Long)],
+      minIntervalMs: Long, maxIntervalMs: Long): Long = {
+    val byTime = captures.sortBy(c => (c._1, c._3))
+    val changes = byTime.iterator.sliding(2).count(w => w.size == 2 && w(0)._2 != w(1)._2)
+    if (changes == 0) maxIntervalMs
+    else math.min(math.max((byTime.last._1 - byTime.head._1) / changes,
+      minIntervalMs), maxIntervalMs)
+  }
+
   /** [[schedule]] fed straight from a CDX capture index
     * ([[graft.sources.CdxLookup.entries]] / [[graft.sinks.Sinks.cdxIndex]]
     * rows: url, 14-digit UTC timestamp, content digest …) — the archive

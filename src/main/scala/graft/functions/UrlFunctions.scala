@@ -232,47 +232,34 @@ object UrlFunctions {
     cur
   }
 
-  /** The leftmost match of the reference's RELATIVE_PATH_PATTERN
-    * (SimpleUrlNormalizer.java:55-56) as `start << 32 | end`, or -1: a
-    * `/seg/../` whose parent segment contains a non-dot character, or a
-    * leading run of `/../`. The `..` must be followed by `/`.
+  /** RFC 3986 dot-segment removal in one left-to-right pass over the
+    * segments, keeping the reference's two quirks (SimpleUrlNormalizer
+    * .java:55-56): a `..` pops its parent only when the parent holds a
+    * non-dot character, and a trailing `..` with no `/` after it is
+    * kept. `.` and empty segments drop out BEFORE any `..` sees them, so
+    * `/a/./../b` and `/a//../b` resolve to `/b` at once and a second
+    * pass changes nothing. The result keeps a trailing slash when the
+    * path ends in `/` or `/.`.
     */
-  private def dotSegmentMatch(p: String): Long = {
-    var s = p.indexOf('/')
-    while (s >= 0) {
-      val next = p.indexOf('/', s + 1)
-      if (next > s + 1 && p.startsWith("/../", next)) {
-        var k = s + 1
-        while (k < next && p.charAt(k) == '.') k += 1
-        if (k < next) return (s.toLong << 32) | (next + 4)
-      }
-      if (s == 0 && p.startsWith("/../")) {
-        var e = 4
-        while (p.startsWith("/../", e)) e += 4
-        return e.toLong
-      }
-      s = next
+  private[functions] def normalizePathSegments(path: String): String = {
+    val segs = path.split("/", -1)
+    val kept = new scala.collection.mutable.ArrayBuffer[String](segs.length)
+    var i = 0
+    while (i < segs.length) {
+      val seg = segs(i)
+      if (seg == ".." && i < segs.length - 1) {
+        if (kept.nonEmpty && kept.last.exists(_ != '.')) kept.remove(kept.length - 1)
+        else if (kept.nonEmpty) kept += seg
+      } else if (seg.nonEmpty && seg != ".") kept += seg
+      i += 1
     }
-    -1L
-  }
-
-  /** Resolve `/seg/../` runs the way the reference applies its pattern —
-    * replace the leftmost match by `/` until none is left — so a
-    * trailing `/..` without a slash is kept (their golden case) and
-    * leading `/../` runs collapse.
-    */
-  private[functions] def normalizePathSegments(path0: String): String = {
-    var path = path0
-    var m = if (path.contains("/../")) dotSegmentMatch(path) else -1L
-    while (m >= 0) {
-      path = path.substring(0, (m >>> 32).toInt) + "/" + path.substring(m.toInt)
-      m = dotSegmentMatch(path)
-    }
-    path
+    val trailingSlash = kept.nonEmpty && (path.endsWith("/") || path.endsWith("/."))
+    kept.mkString("/", "/", if (trailingSlash) "/" else "")
   }
 
   /** Drop every `;jsessionid=` matrix param (any case) up to the next `;`,
-    * scanning left to right once, as `replaceAll` does.
+    * `/`, `?` or `#`, scanning left to right once, as `replaceAll` does.
+    * The param belongs to its segment: `/a;jsessionid=1/c` keeps `/c`.
     */
   private def stripJsessionid(path: String): String = {
     var i = path.indexOf(';')
@@ -283,7 +270,7 @@ object UrlFunctions {
       if (startsWithAsciiCi(path, i, ";jsessionid=")) {
         sb.append(path, from, i)
         var j = i + 12
-        while (j < path.length && path.charAt(j) != ';' &&
+        while (j < path.length && path.charAt(j) != ';' && path.charAt(j) != '/' &&
           path.charAt(j) != '?' && path.charAt(j) != '#') j += 1
         from = j
         i = path.indexOf(';', j)
@@ -293,25 +280,17 @@ object UrlFunctions {
   }
 
   /** Append the normalized form of a raw URL path: strip ;jsessionid, then
-    * escape-normalize FIRST — dot-segment resolution, default-page
-    * removal and the `.`/empty filters must see final forms, or
-    * %2e-encoded dot segments would survive one pass and resolve on the
-    * next (idempotence).
+    * escape-normalize FIRST — dot-segment resolution and default-page
+    * removal must see final forms, or %2e-encoded dot segments would
+    * survive one pass and resolve on the next (idempotence).
     */
   private def appendPath(sb: java.lang.StringBuilder, raw: String): Unit = {
-    var path = stripJsessionid(raw)
-    if (path.isEmpty) path = "/"
-    path = normalizePathSegments(normalizeEscaping(path, inQuery = false))
+    val path = normalizePathSegments(
+      normalizeEscaping(stripJsessionid(raw), inQuery = false))
     val last = path.lastIndexOf('/')
     if (DefaultPages.contains(path.substring(last + 1).toLowerCase(java.util.Locale.ROOT)))
-      path = path.substring(0, last + 1)
-    // '/a/.' is the same location as '/a/' (RFC 3986 dot-segment), so a
-    // trailing '/.' preserves the trailing slash after the '.' drops out
-    val trailingSlash = path.endsWith("/") || path.endsWith("/.")
-    val segs = path.split("/").filter(seg => seg.nonEmpty && seg != ".")
-    if (segs.isEmpty) sb.append('/')
-    else segs.foreach(seg => sb.append('/').append(seg))
-    if (segs.nonEmpty && trailingSlash) sb.append('/')
+      sb.append(path, 0, last + 1)
+    else sb.append(path)
   }
 
   private def normalizeHostname(host: String): String = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, TimestampNTZType, TimestampType}
 
 import graft.plans.ZOrderExpressions
-import graft.util.{Pooled, StoreProtocol}
+import graft.util.{ParquetRead, Pooled, StoreProtocol}
 
 /** Multi-column data skipping: Z-order clustering at write time plus a
   * file-level min-max statistics sidecar consulted at read time, so a
@@ -287,20 +287,15 @@ object DataSkipping {
   private def fileMinMax(
       conf: org.apache.hadoop.conf.Configuration, p: Path,
       cols: Seq[String]): Seq[(String, Option[(Long, Long)])] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     // a universe file whose footer can't be read (foreign non-parquet
     // bytes) records empty stats — never pruned, surfaced by the actual
     // scan if it truly isn't parquet — rather than failing the sidecar
-    val reader =
-      try ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val footer =
+      try ParquetRead.footer(conf, p)
       catch { case _: java.io.IOException |
                    _: RuntimeException => return cols.map((_, None)) }
-    try {
-      val footer = reader.getFooter
-      cols.map(c =>
-        (c, fileColStats(footer, c, timestampMicrosOk = true).flatten))
-    } finally reader.close()
+    cols.map(c =>
+      (c, fileColStats(footer, c, timestampMicrosOk = true).flatten))
   }
 
   /** Read `dir` under the conjunction of `ranges` (inclusive, long form —
@@ -440,8 +435,6 @@ object DataSkipping {
     */
   def footerMax(
       spark: SparkSession, dir: String, c: String): Option[Option[Long]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
     val files = dataFiles(StoreProtocol.fs(spark, dir), dir)
     if (files.isEmpty) return Some(None)
@@ -449,15 +442,12 @@ object DataSkipping {
       Pooled.ordered(files, threads = 16, name = "footermax") { p =>
         // unreadable footer (foreign non-parquet file in the universe):
         // undeterminable — the caller's scan fallback owns the error
-        val readerOpt =
-          try Some(ParquetFileReader.open(HadoopInputFile.fromPath(p, conf)))
+        val footerOpt =
+          try Some(ParquetRead.footer(conf, p))
           catch { case _: java.io.IOException |
                        _: RuntimeException => None }
-        readerOpt.flatMap { reader =>
-          try fileColStats(reader.getFooter, c, timestampMicrosOk = false)
-            .map(_.map(_._2))
-          finally reader.close()
-        }
+        footerOpt.flatMap(
+          fileColStats(_, c, timestampMicrosOk = false).map(_.map(_._2)))
       }
     if (perFile.exists(_.isEmpty)) None
     else Some(perFile.flatten.flatten.maxOption)

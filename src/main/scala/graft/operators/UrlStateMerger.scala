@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.schema.{CrawlStateUrl, FetchStatus}
@@ -17,11 +16,10 @@ import graft.schema.{CrawlStateUrl, FetchStatus}
   *    break on FetchStatus priority, then lexicographic status for total
   *    determinism.
   *
-  * Exposed two ways:
-  *  1. [[UrlStateMerger.aggregator]] — a typed `Aggregator` for
-  *     `Dataset[CrawlStateUrl].groupByKey(_.url)` use in the streaming
-  *     frontier merge (associative + commutative, so Spark can apply it
-  *     map-side before the shuffle);
+  * Exposed two ways, pinned against each other by UrlStateMergerSpec:
+  *  1. [[UrlStateMerger.mergeAll]] — an in-memory fold of one partition's
+  *     sightings through the [[UrlStateMerger.MergeBuf]] buffer, the
+  *     crawl round's merge (the reference's `MapState` per subtask);
   *  2. [[UrlStateMerger.mergeFrontier]] — the equivalent whole-stage-codegen
   *     columnar form for batch plans (conditional aggregation, no UDAF).
   */
@@ -30,7 +28,7 @@ object UrlStateMerger {
   /** Merge two states of the same URL (the reference's pairwise contract).
     * NOTE: folding this pairwise over 3+ records is order-sensitive in one
     * corner (the accumulated max(statusTime) participates in later
-    * tie-breaks), which is why [[aggregator]] uses a dedicated buffer that
+    * tie-breaks), which is why [[mergeAll]] uses a dedicated buffer that
     * keeps the winner's own key separate from the accumulated aggregates.
     */
   def merge(a: CrawlStateUrl, b: CrawlStateUrl): CrawlStateUrl = {
@@ -66,12 +64,13 @@ object UrlStateMerger {
 
   /** Aggregation buffer: best terminal record, best lifecycle record (by the
     * record's OWN key, so fold order can't leak accumulated values into
-    * tie-breaks), plus the three accumulated aggregates.
+    * tie-breaks), plus the three accumulated aggregates. The score sum is
+    * a double, as Spark's `sum` over the float column is.
     */
   final case class MergeBuf(
       term: CrawlStateUrl,      // null until a terminal record is seen
       life: CrawlStateUrl,      // null until a lifecycle record is seen
-      sumUnfetched: Float,
+      sumUnfetched: Double,
       lifeMaxTime: Long,
       lifeMinNext: Long)
 
@@ -90,40 +89,36 @@ object UrlStateMerger {
     else if (lifeOrd(a) >= lifeOrd(b)) a else b
   }
 
-  /** Typed aggregator over a URL's sightings — associative, commutative,
-    * order-independent; safe for map-side partial aggregation.
-    */
-  val aggregator: Aggregator[CrawlStateUrl, MergeBuf, CrawlStateUrl] =
-    new Aggregator[CrawlStateUrl, MergeBuf, CrawlStateUrl] {
-      override def zero: MergeBuf =
-        MergeBuf(null, null, 0.0f, Long.MinValue, Long.MaxValue)
-      override def reduce(buf: MergeBuf, in: CrawlStateUrl): MergeBuf =
-        if (FetchStatus.isFetchedIsh(in.status))
-          buf.copy(term = maxByTerm(buf.term, in))
-        else MergeBuf(
-          buf.term,
-          maxByLife(buf.life, in),
-          buf.sumUnfetched +
-            (if (in.status == FetchStatus.UNFETCHED) in.score else 0.0f),
-          math.max(buf.lifeMaxTime, in.statusTime),
-          math.min(buf.lifeMinNext, in.nextFetchTime))
-      override def merge(b1: MergeBuf, b2: MergeBuf): MergeBuf = MergeBuf(
-        maxByTerm(b1.term, b2.term),
-        maxByLife(b1.life, b2.life),
-        b1.sumUnfetched + b2.sumUnfetched,
-        math.max(b1.lifeMaxTime, b2.lifeMaxTime),
-        math.min(b1.lifeMinNext, b2.lifeMinNext))
-      override def finish(b: MergeBuf): CrawlStateUrl =
-        if (b.term != null) b.term
-        else b.life.copy(
-          statusTime = b.lifeMaxTime,
-          score =
-            if (b.life.status == FetchStatus.UNFETCHED) b.sumUnfetched
-            else b.life.score,
-          nextFetchTime = b.lifeMinNext)
-      override def bufferEncoder: Encoder[MergeBuf] = Encoders.product[MergeBuf]
-      override def outputEncoder: Encoder[CrawlStateUrl] = Encoders.product[CrawlStateUrl]
-    }
+  val zero: MergeBuf = MergeBuf(null, null, 0.0, Long.MinValue, Long.MaxValue)
+
+  /** Fold one sighting into a URL's buffer — order-independent. */
+  def reduce(buf: MergeBuf, in: CrawlStateUrl): MergeBuf =
+    if (FetchStatus.isFetchedIsh(in.status))
+      buf.copy(term = maxByTerm(buf.term, in))
+    else MergeBuf(
+      buf.term,
+      maxByLife(buf.life, in),
+      buf.sumUnfetched +
+        (if (in.status == FetchStatus.UNFETCHED) in.score.toDouble else 0.0),
+      math.max(buf.lifeMaxTime, in.statusTime),
+      math.min(buf.lifeMinNext, in.nextFetchTime))
+
+  def finish(b: MergeBuf): CrawlStateUrl =
+    if (b.term != null) b.term
+    else b.life.copy(
+      statusTime = b.lifeMaxTime,
+      score =
+        if (b.life.status == FetchStatus.UNFETCHED) b.sumUnfetched.toFloat
+        else b.life.score,
+      nextFetchTime = b.lifeMinNext)
+
+  /** One output row per url of `rows`, merged in memory. */
+  def mergeAll(rows: Iterator[CrawlStateUrl]): Iterator[CrawlStateUrl] = {
+    val bufs = new java.util.HashMap[String, MergeBuf]()
+    rows.foreach(r => bufs.put(r.url, reduce(bufs.getOrDefault(r.url, zero), r)))
+    scala.jdk.CollectionConverters.IteratorHasAsScala(
+      bufs.values().iterator()).asScala.map(finish)
+  }
 
   /** Columnar batch form of the same semantics, for plans that stay inside
     * whole-stage codegen. Input columns: url, pld, status, statusTime,

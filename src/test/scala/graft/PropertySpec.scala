@@ -42,7 +42,9 @@ class PropertySpec extends AnyFunSuite {
     host <- hostGen
     port <- Gen.oneOf("", ":80", ":443", ":8080")
     path <- Gen.oneOf("", "/", "/a/b", "/a/../c", "/x/./y", "/index.html",
-      "/%7Euser", "/p%2zbad", "/a/b/%2e%2e/", "/a/%2e", "/x%2Fy")
+      "/%7Euser", "/p%2zbad", "/a/b/%2e%2e/", "/a/%2e", "/x%2Fy",
+      "/a/./../b", "/a/%2e/../b", "/a/%2E/%2e%2e/b", "/a//../b",
+      "/x/a;jsessionid=1/../b")
     query <- Gen.oneOf("", "?q=1", "?jsessionid=ABC&x=2", "?utm_source=t&b=2",
       ";jsessionid=XYZ", "?%73id=x&keep=1", "?a=%20b&a=%20b",
       "?sid%3Dx", "?a%26sid=1", "?%2573id=x")

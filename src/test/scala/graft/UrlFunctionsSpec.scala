@@ -46,6 +46,20 @@ class UrlFunctionsSpec extends AnyFunSuite {
     assert(normalizeUrl("http://example.com/a/b/..") == "http://example.com/a/b/..")
   }
 
+  test("a `.`, `%2e` or empty segment before `..` resolves in one pass") {
+    Seq("http://h.com/a/./../b", "http://h.com/a/%2e/../b",
+      "http://h.com/a/%2E/%2e%2e/b", "http://h.com/a//../b").foreach { u =>
+      assert(normalizeUrl(u) == "http://h.com/b", u)
+      assert(normalizeUrl(normalizeUrl(u)) == "http://h.com/b", u)
+    }
+  }
+
+  test(";jsessionid= is stripped within its own path segment") {
+    assert(normalizeUrl("http://h.com/x/a;jsessionid=1/c/d?q=1") ==
+      "http://h.com/x/a/c/d?q=1")
+    assert(normalizeUrl("http://h.com/x/a;jsessionid=1/../b") == "http://h.com/x/b")
+  }
+
   test("default pages are dropped") {
     assert(normalizeUrl("http://example.com/index.html") == "http://example.com/")
     assert(normalizeUrl("http://example.com/a/index.php") == "http://example.com/a/")

@@ -130,10 +130,14 @@ class UrlKernelParitySpec extends AnyFunSuite {
 
     /** Resolve `/seg/../` runs with the reference's iterative pattern —
       * a trailing `/..` without a slash is deliberately kept (their golden
-      * case), and leading `/../` runs collapse.
+      * case), and leading `/../` runs collapse. `.` and empty segments are
+      * dropped first (a trailing `/.` keeps its slash), so no `..`
+      * resolves against one on a second normalize pass.
       */
     def normalizePathSegments(path0: String): String = {
-      var path = path0
+      val trailing = path0.endsWith("/") || path0.endsWith("/.")
+      val segs = path0.split("/").filter(s => s.nonEmpty && s != ".")
+      var path = segs.mkString("/", "/", if (trailing && segs.nonEmpty) "/" else "")
       var m = RelativePathPattern.findFirstMatchIn(path)
       while (m.isDefined) {
         path = path.substring(0, m.get.start) + "/" + path.substring(m.get.end)
@@ -193,7 +197,7 @@ class UrlKernelParitySpec extends AnyFunSuite {
       // (idempotence). Per-segment encoding cannot create new boundaries
       // (an encoded %2f re-encodes inside its segment).
       var path = Option(parsed.getPath).getOrElse("")
-      path = path.replaceAll("(?i);jsessionid=[^?#;]*", "")
+      path = path.replaceAll("(?i);jsessionid=[^?#;/]*", "")
       if (path.isEmpty) path = "/"
       path = path.split("/", -1)
         .map(normalizeEscaping(_, inQuery = false)).mkString("/")

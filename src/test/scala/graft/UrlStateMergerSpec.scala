@@ -56,8 +56,7 @@ class UrlStateMergerSpec extends AnyFunSuite {
     }
   }
 
-  test("typed aggregator fold order does not change the result") {
-    val agg = UrlStateMerger.aggregator
+  test("MergeBuf fold order does not change the result") {
     // includes the order-sensitivity corner for naive pairwise folding:
     // equal-priority lifecycle records whose tie-break is statusTime
     val recordSets = Seq(
@@ -72,38 +71,37 @@ class UrlStateMergerSpec extends AnyFunSuite {
         csu(FS.FETCHING, 825, 9f)))
     recordSets.foreach { records =>
       val results = records.permutations.map { perm =>
-        agg.finish(perm.foldLeft(agg.zero)(agg.reduce))
+        UrlStateMerger.finish(perm.foldLeft(UrlStateMerger.zero)(UrlStateMerger.reduce))
       }.toSeq.distinct
       assert(results.size == 1, s"order-dependent results: $results")
     }
   }
 
-  test("columnar mergeFrontier matches typed aggregator") {
+  test("in-memory mergeAll matches columnar mergeFrontier on randomized sighting sequences") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    val rnd = new scala.util.Random(42)
     val statuses = Seq(FS.UNFETCHED, FS.UNFETCHED, FS.UNFETCHED, FS.QUEUED,
-      FS.FETCHING, FS.FETCHED, FS.HTTP_NOTFOUND, FS.SKIPPED_BLOCKED)
-    val rows = (1 to 400).map { i =>
-      val url = s"http://d${rnd.nextInt(10)}.com/p${rnd.nextInt(12)}"
-      CrawlStateUrl(url, graft.functions.UrlFunctions.extractPld(url),
-        statuses(rnd.nextInt(statuses.size)),
-        rnd.nextInt(1000).toLong,
-        rnd.nextInt(10).toFloat,
-        rnd.nextInt(5000).toLong)
+      FS.FETCHING, FS.FETCHED, FS.HTTP_NOTFOUND, FS.SKIPPED_BLOCKED,
+      FS.SKIPPED_DEFERRED)
+    def key(r: CrawlStateUrl) =
+      (r.url, r.pld, r.status, r.statusTime, r.score, r.nextFetchTime)
+    (1 to 8).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // few urls, few distinct times: many ties on statusTime and status
+      val rows = (1 to 50 * seed).map { _ =>
+        val url = s"http://d${rnd.nextInt(4)}.com/p${rnd.nextInt(3 * seed)}"
+        CrawlStateUrl(url, graft.functions.UrlFunctions.extractPld(url),
+          statuses(rnd.nextInt(statuses.size)),
+          rnd.nextInt(6).toLong * 100,
+          rnd.nextInt(8) * 0.25f,
+          rnd.nextInt(6).toLong * 1000)
+      }
+      val shuffled = rnd.shuffle(rows)
+      val inMemory = UrlStateMerger.mergeAll(shuffled.iterator).map(key).toSet
+      val columnar = UrlStateMerger.mergeFrontier(rows.toDF().repartition(3))
+        .as[CrawlStateUrl].collect().map(key).toSet
+      assert(inMemory == columnar, s"seed $seed: only in-memory " +
+        s"${(inMemory -- columnar).take(3)}, only columnar ${(columnar -- inMemory).take(3)}")
     }
-    val agg = UrlStateMerger.aggregator
-    val expected = rows
-      .groupBy(_.url)
-      .map { case (_, rs) => agg.finish(rs.foldLeft(agg.zero)(agg.reduce)) }
-      .map(r => (r.url, r.status, r.statusTime, r.score, r.nextFetchTime))
-      .toSet
-    val got = UrlStateMerger
-      .mergeFrontier(rows.toDF())
-      .as[CrawlStateUrl]
-      .collect()
-      .map(r => (r.url, r.status, r.statusTime, r.score, r.nextFetchTime))
-      .toSet
-    assert(got == expected)
   }
 }
