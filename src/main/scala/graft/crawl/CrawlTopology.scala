@@ -170,13 +170,17 @@ final case class CrawlResult(
   *     ── robots gate → politeness rank → fetch → parse
   *     ── advance the owned domain state (politeness clock, scores)
   *   then derive {statusUpdates, outlinks, sitemapUrls}, clean the new
-  *   URLs and append them to the WAL, one file per owner: outlinks cross
-  *   domains, so this write is where rows change partition.
+  *   URLs and append them to the WAL as one small file; every owner reads
+  *   it next round and keeps its own rows (outlinks cross domains).
   *
-  * Scale notes: the per-round working set is bounded by `maxQueueSize`
-  * regardless of frontier size, and no round shuffles store rows: each
-  * task reads its own bucket files. The only cross-domain values are the
-  * global score mean and the queue cut, both computed on the driver.
+  * Scale notes: no round shuffles store rows — each task reads its own
+  * bucket files and streams them through its schedule. A task holds its
+  * share of the pending WAL rows (the commits since the last fold), its
+  * domains' state and one bounded heap per domain, not its bucket rows;
+  * in-memory mode (`frontierRoot = None`) holds its whole share of the
+  * frontier, which it keeps between rounds. The only cross-domain values
+  * are the global score mean and the queue cut, both computed on the
+  * driver.
   */
 final case class Candidate(url: String, pld: String, score: Float)
 
@@ -412,15 +416,19 @@ object CrawlTopology {
     }
   }
 
-  /** Sightings of one owner partition merged, plus its state rows:
-    * in-memory frontier rows, domain state and capture windows.
+  /** One owner partition's domain state and capture windows, read from
+    * its state rows, and its merged frontier as a stream: in in-memory
+    * mode the kept frontier rows merged with this round's commits; in
+    * durable mode `rows` as given, which [[FrontierStore.ownedRows]]
+    * already merged.
     */
   private final case class Owned(
-      merged: Vector[CrawlStateUrl],
       domains: scala.collection.mutable.Map[String, DomainState],
-      captures: scala.collection.mutable.Map[String, Vector[Capture]])
+      captures: scala.collection.mutable.Map[String, Vector[Capture]],
+      frontier: Iterator[CrawlStateUrl])
 
-  private def own(state: Iterator[RoundRow], rows: Iterator[CrawlStateUrl]): Owned = {
+  private def own(state: Iterator[RoundRow], rows: Iterator[CrawlStateUrl],
+      ctx: PassCtx): Owned = {
     val fronts = Vector.newBuilder[CrawlStateUrl]
     val domains = scala.collection.mutable.HashMap.empty[String, DomainState]
     val captures = scala.collection.mutable.HashMap.empty[String, Vector[Capture]]
@@ -430,17 +438,27 @@ object CrawlTopology {
       else if (r.capture != null)
         captures(r.capture.url) = captures.getOrElse(r.capture.url, Vector.empty) :+ r.capture
     }
-    Owned(UrlStateMerger.mergeAll(fronts.result().iterator ++ rows).toVector,
-      domains, captures)
+    Owned(domains, captures,
+      if (ctx.keepFrontier) UrlStateMerger.mergeOnto(fronts.result().iterator, rows)
+      else rows)
   }
+
+  /** One owner's schedule: the candidates best first, the eligible-row
+    * and domain counts, and (in-memory mode) the merged frontier rows to
+    * keep for the next round.
+    */
+  private final case class Sched(
+      candidates: Seq[Candidate], eligible: Long, plds: Long,
+      kept: Vector[CrawlStateUrl])
 
   /** The schedule of one owner partition — FetchQueue semantics: the
     * eligible rows of domains whose politeness clock has passed, each
     * domain's best `quota` by (score, url) through a bounded heap, and
-    * only the candidates at or above the round's global cut. Returns the
-    * candidates best first and the eligible-row count.
+    * only the candidates at or above the round's global cut. The merged
+    * frontier streams through once; what stays in memory is the heaps
+    * and the domain set.
     */
-  private def schedule(o: Owned, ctx: PassCtx): (Seq[Candidate], Long) = {
+  private def schedule(o: Owned, ctx: PassCtx): Sched = {
     val cfg = ctx.cfg
     // SKIPPED_DEFERRED rows re-arm once their (short) retry interval
     // passes — the whole point of defer-vs-block: by then the robots
@@ -455,9 +473,9 @@ object CrawlTopology {
       }.getOrElse(interval)
       r.status == FS.FETCHED && r.statusTime + every <= ctx.now
     }
-    val eligible = o.merged.filter(r =>
+    def isEligible(r: CrawlStateUrl) =
       ((r.status == FS.UNFETCHED || r.status == FS.SKIPPED_DEFERRED) &&
-        r.nextFetchTime <= ctx.now || refetchDue(r)) && r.score >= cfg.minFetchScore)
+        r.nextFetchTime <= ctx.now || refetchDue(r)) && r.score >= cfg.minFetchScore
     // focused crawling: a domain's fetch quota is its moving-average page
     // score against the global mean (G1) — score-proportional
     // scheduling, clamp [1, boost x base]; unscored domains get base
@@ -472,13 +490,21 @@ object CrawlTopology {
     val key = (c: CrawlStateUrl) => (c.score, c.url)
     val heaps = scala.collection.mutable.HashMap.empty[String, java.util.PriorityQueue[CrawlStateUrl]]
     val worstFirst = bestFirst.on(key).reverse
-    eligible.foreach { r =>
-      if (o.domains.get(r.pld).forall(_.nextAllowed <= ctx.now)) {
-        val k = quota(r.pld)
-        if (k > 0) {
-          val h = heaps.getOrElseUpdate(r.pld, new java.util.PriorityQueue(k, worstFirst))
-          if (h.size < k) h.add(r)
-          else if (bestFirst.lt(key(r), key(h.peek()))) { h.poll(); h.add(r) }
+    val plds = scala.collection.mutable.HashSet.empty[String]
+    val kept = Vector.newBuilder[CrawlStateUrl]
+    var eligible = 0L
+    o.frontier.foreach { r =>
+      plds += r.pld
+      if (ctx.keepFrontier) kept += r
+      if (isEligible(r)) {
+        eligible += 1
+        if (o.domains.get(r.pld).forall(_.nextAllowed <= ctx.now)) {
+          val k = quota(r.pld)
+          if (k > 0) {
+            val h = heaps.getOrElseUpdate(r.pld, new java.util.PriorityQueue(k, worstFirst))
+            if (h.size < k) h.add(r)
+            else if (bestFirst.lt(key(r), key(h.peek()))) { h.poll(); h.add(r) }
+          }
         }
       }
     }
@@ -486,7 +512,8 @@ object CrawlTopology {
         scala.jdk.CollectionConverters.CollectionHasAsScala(h).asScala)
       .filter(r => ctx.queueOpen && ctx.cut.forall(bestFirst.lteq(key(r), _)))
       .toVector.sortBy(key)(bestFirst)
-    (picked.map(r => Candidate(r.url, r.pld, r.score)), eligible.size.toLong)
+    Sched(picked.map(r => Candidate(r.url, r.pld, r.score)), eligible, plds.size,
+      kept.result())
   }
 
   /** Advances one owner's state by its fetch rows of this round, one row
@@ -552,10 +579,12 @@ object CrawlTopology {
   private val newestFirst: Ordering[(Int, Float)] =
     Ordering.Tuple2(Ordering.Int, Ordering.Float.TotalOrdering).reverse
 
-  /** The owner's state rows, then its tally. */
-  private def stateRows(o: Owned, tally: PassTally, ctx: PassCtx): Iterator[RoundRow] =
-    (if (ctx.keepFrontier) o.merged.iterator.map(r => RoundRow(front = r))
-     else Iterator.empty) ++
+  /** The owner's state rows — the kept frontier `front`, its domains and
+    * captures — then its tally.
+    */
+  private def stateRows(
+      o: Owned, front: Iterator[CrawlStateUrl], tally: PassTally): Iterator[RoundRow] =
+    front.map(r => RoundRow(front = r)) ++
       o.domains.valuesIterator.map(d => RoundRow(domain = d)) ++
       o.captures.valuesIterator.flatten.map(c => RoundRow(capture = c)) ++
       Iterator(RoundRow(tally = tally))
@@ -570,9 +599,9 @@ object CrawlTopology {
     */
   private def ownerPass(state: Iterator[RoundRow], rows: Iterator[CrawlStateUrl],
       ctx: PassCtx, robots: Fetcher, pages: Fetcher): Iterator[RoundRow] = {
-    val o = own(state, rows)
-    val (candidates, eligible) = schedule(o, ctx)
-    val (held, cleared) = gate(candidates.iterator, robots, ctx.scope, ctx.cfg)
+    val o = own(state, rows, ctx)
+    val sched = schedule(o, ctx)
+    val (held, cleared) = gate(sched.candidates.iterator, robots, ctx.scope, ctx.cfg)
     val advance = new Advance(o, ctx)
     val out =
       if (!ctx.fetch) cleared.iterator.map(v => SeamRow(v.url, v.pld, v.score,
@@ -585,12 +614,12 @@ object CrawlTopology {
           advance.add(row)
           row
         }
-    val tally = PassTally(queued = candidates.size, eligible = eligible,
-      plds = o.merged.iterator.map(_.pld).toSet.size,
+    val tally = PassTally(queued = sched.candidates.size, eligible = sched.eligible,
+      plds = sched.plds,
       sitemaps = held.map(_.sitemaps.size.toLong).sum +
         cleared.map(_.sitemaps.size.toLong).sum)
     (held.iterator ++ out).map(s => RoundRow(seam = s)) ++
-      stateRows(o, advance.finish(tally), ctx)
+      stateRows(o, sched.kept.iterator, advance.finish(tally))
   }
 
   def run(
@@ -694,13 +723,12 @@ object CrawlTopology {
     var walPending = 0
     def commitFrontier(updates: DataFrame): Unit = cfg.frontierRoot match {
       case Some(root) =>
-        // durable round commit = ONE WAL append routed by owner (the full
-        // bucketed write cycle every round was the measured live-crawl
-        // limiter, PERF_NOTES r16/r17); the next pass reads each owner's
-        // bucket files and WAL rows in its own task, and the crawl
-        // survives a driver restart at ANY point (manifest watermark
-        // makes replay exactly-once)
-        FrontierStore.appendWal(spark, root, updates, walSeq, buckets, seamParts)
+        // durable round commit = ONE small WAL append (the full bucketed
+        // write cycle every round was the measured live-crawl limiter,
+        // PERF_NOTES r16/r17); each owner of the next pass reads it and
+        // keeps its own rows, and the crawl survives a driver restart at
+        // ANY point (manifest watermark makes replay exactly-once)
+        FrontierStore.appendWal(spark, root, updates, walSeq)
         walSeq += 1
         walPending += 1
         if (walPending >= math.max(1, cfg.frontierCompactEvery)) {
@@ -778,7 +806,7 @@ object CrawlTopology {
         if (pldBound.exists(_ * maxQuota <= cfg.maxQueueSize)) ctx0
         else {
           val best = spark.createDataset(state.rdd.zipPartitions(owned()) {
-              (st, rows) => schedule(own(st, rows), ctx0)._1.iterator
+              (st, rows) => schedule(own(st, rows, ctx0), ctx0).candidates.iterator
             }).orderBy(col("score").desc, col("url").asc)
             .limit(math.min(cfg.maxQueueSize.toLong + 1, Int.MaxValue).toInt).collect()
           if (best.length <= cfg.maxQueueSize) ctx0
@@ -828,10 +856,10 @@ object CrawlTopology {
             val advObs = org.apache.spark.sql.Observation()
             val advanced = spark.createDataset(state.rdd.zipPartitions(
                 route(outcomes.rdd)(_.pld)) { (st, rows) =>
-                val o = own(st, Iterator.empty)
+                val o = own(st, Iterator.empty, ctx)
                 val advance = new Advance(o, ctx)
                 rows.foreach(advance.add)
-                stateRows(o, advance.finish(PassTally()), ctx)
+                stateRows(o, o.frontier, advance.finish(PassTally()))
               }).observe(advObs, tallyCols.head, tallyCols.tail: _*)
               .localCheckpoint(true)
             state = stateOf(advanced)
@@ -997,7 +1025,7 @@ object CrawlTopology {
           .getOrElse(spark.emptyDataset[CrawlStateUrl].toDF())
       case None =>
         spark.createDataset(state.rdd.zipPartitions(pending.rdd) { (st, rows) =>
-          UrlStateMerger.mergeAll(st.filter(_.front != null).map(_.front) ++ rows)
+          UrlStateMerger.mergeOnto(st.filter(_.front != null).map(_.front), rows)
         }).toDF().localCheckpoint(true)
     }
 

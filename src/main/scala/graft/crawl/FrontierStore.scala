@@ -2,7 +2,7 @@ package graft.crawl
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.SerializableWritable
+import org.apache.spark.{SerializableWritable, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -450,9 +450,9 @@ object FrontierStore {
   // (merge read + B small parquet files + sidecars) every round — the
   // fixed per-round cost LiveCrawlBench measured as the live-crawl
   // throughput limiter. The WAL makes the round commit ONE small
-  // parquet append, routed by owner partition; the bucketed fold runs
-  // every `frontierCompactEvery` rounds instead. A crawl round reads
-  // each owner's bucket files and WAL rows in its own task
+  // single-file parquet append; the bucketed fold runs every
+  // `frontierCompactEvery` rounds instead. A crawl round reads each
+  // owner's bucket files and WAL rows in its own task
   // ([[ownedRows]]); other readers get the exact merged view via
   // [[readResolved]] (store ∪ pending WAL, resolved with broadcast-sized
   // joins — the big store side is never shuffled).
@@ -500,40 +500,24 @@ object FrontierStore {
   }
 
   /** Durably append one round's updates (CrawlStateUrl rows) as WAL
-    * batch `seq`, routed to their owners: ONE write task splits the rows
-    * into one small file per owner partition ([[ownerOf]] under
-    * `buckets` and `parts`) under `w<seq>/parts=<parts>/owner=<p>`, with
-    * no shuffle. Overwrite mode reclaims a torn dir a crashed attempt at
-    * this seq left behind.
+    * batch `seq`: ONE small parquet file, one write job. Overwrite mode
+    * reclaims a torn dir a crashed attempt at this seq left behind.
     */
   def appendWal(
       spark: SparkSession, root: String, updates: DataFrame,
-      seq: Long, buckets: Int = 64, parts: Int = 1): Unit =
-    updates
-      .withColumn("parts", lit(parts))
-      .withColumn("owner", pmod(bucketOf(buckets), lit(parts)))
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("parts", "owner")
+      seq: Long): Unit =
+    updates.coalesce(1).write.mode("overwrite")
       .parquet(new Path(walDirPath(root), s"w$seq").toString)
 
-  /** The rows of WAL batches in one scan of their leaf dirs: a batch
-    * routed by owner keeps its files under `parts=<n>/owner=<p>`.
-    */
-  private def readWal(spark: SparkSession, batches: Seq[(Long, Path)]): DataFrame = {
-    val f = fs(spark, batches.head._2.toString)
-    def subdirs(p: Path) = f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-    ParquetRead(spark, batches.flatMap { case (_, batch) =>
-      val routed = subdirs(batch).filter(_.getName.startsWith("parts="))
-      if (routed.isEmpty) Seq(batch.toString) else routed.flatMap(subdirs).map(_.toString)
-    })
-  }
-
-  /** The frontier's rows partitioned by owner: partition p of the result
-    * holds the rows of the bucket files b ≡ p (mod `parts`) in the current
-    * manifest plus owner p's rows of every pending WAL batch, unmerged,
-    * read inside the task that owns them (no shuffle). A batch routed
-    * for another partition count is read by every task and filtered.
-    * `buckets` must be the store's bucket count, as for [[mergeInto]].
+  /** The merged frontier partitioned by owner: partition p of the result
+    * is the rows of the bucket files b ≡ p (mod `parts`) in the current
+    * manifest merged with owner p's rows of every pending WAL batch,
+    * read and merged inside the task that owns them (no shuffle). Each
+    * task reads every pending batch and keeps the rows [[ownerOf]] gives
+    * it; only those are held in memory, and the bucket rows (one per url)
+    * stream past them ([[UrlStateMerger.mergeOnto]]). `buckets` is the
+    * count the store is (or, fresh, will be) built with, as for
+    * [[mergeInto]].
     */
   def ownedRows(
       spark: SparkSession, root: String, parts: Int, buckets: Int,
@@ -545,28 +529,24 @@ object FrontierStore {
     require(storeBuckets == buckets,
       s"store at $root was built with $storeBuckets buckets; owning its " +
         s"rows by $buckets would split per-URL state across partitions")
-    val wal = walBatches(f, root).filter(_._1 > wm).map(_._2)
-    val owned = (0 until parts).map { p =>
-      manifest.toSeq.sortBy(_._1).collect {
-        case (b, tok) if b % parts == p => (bucketLoc(root, b, tok), false)
-      } ++ wal.map { batch =>
-        val routed = new Path(batch, s"parts=$parts")
-        if (f.exists(routed)) (new Path(routed, s"owner=$p").toString, false)
-        else (batch.toString, true)
-      }
-    }
+    val wal = walBatches(f, root).filter(_._1 > wm).map(_._2.toString)
+    val owned = (0 until parts).map(p => manifest.toSeq.sortBy(_._1).collect {
+      case (b, tok) if b % parts == p => bucketLoc(root, b, tok)
+    })
     spark.sparkContext.parallelize(owned, parts).mapPartitionsWithIndex {
-      (p, dirs) => dirs.flatten.flatMap { case (dir, filter) =>
-        val rows = readDir(conf.value.value, dir)
-        if (filter) rows.filter(r => ownerOf(r.pld, buckets, parts) == p)
-        else rows
-      }
+      (p, dirs) =>
+        val c = conf.value.value
+        UrlStateMerger.mergeOnto(dirs.flatten.flatMap(readDir(c, _)),
+          wal.iterator.flatMap(readDir(c, _))
+            .filter(r => ownerOf(r.pld, buckets, parts) == p))
     }
   }
 
   /** Every CrawlStateUrl row of the parquet files under `dir` (none when
-    * it does not exist), through parquet-hadoop's record reader. The
-    * score may be stored as float, double or decimal.
+    * it does not exist), streamed through parquet-hadoop's record reader:
+    * a file opens when the iterator reaches it and closes when drained
+    * (or with the task). The score may be stored as float, double or
+    * decimal.
     */
   private def readDir(conf: Configuration, dir: String): Iterator[CrawlStateUrl] = {
     import org.apache.parquet.example.data.Group
@@ -585,6 +565,9 @@ object FrontierStore {
       }.flatMap { file =>
         val reader = ParquetReader.builder(new GroupReadSupport(), file)
           .withConf(conf).build()
+        var open = true
+        def close(): Unit = if (open) { open = false; reader.close() }
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
         def str(g: Group, c: String) =
           if (g.getFieldRepetitionCount(c) == 0) null else g.getString(c, 0)
         def score(g: Group): Float = {
@@ -601,11 +584,13 @@ object FrontierStore {
             case _ => BigDecimal(BigInt(g.getBinary("score", 0).getBytes), scale).toFloat
           }
         }
-        try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+        Iterator.continually(reader.read()).takeWhile { g =>
+          if (g == null) close()
+          g != null
+        }.map { g =>
           CrawlStateUrl(str(g, "url"), str(g, "pld"), str(g, "status"),
             g.getLong("statusTime", 0), score(g), g.getLong("nextFetchTime", 0))
-        }.toVector.iterator
-        finally reader.close()
+        }
       }
   }
 
@@ -623,7 +608,9 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     val stored = read(spark, root)
-    val wal = if (pending.isEmpty) None else Some(readWal(spark, pending))
+    val wal =
+      if (pending.isEmpty) None
+      else Some(ParquetRead(spark, pending.map(_._2.toString)))
     (stored, wal) match {
       case (None, None) => None
       case (Some(s), None) => Some(s)
@@ -651,7 +638,8 @@ object FrontierStore {
     val wm = currentWalWm(spark, root)
     val pending = walBatches(f, root).filter(_._1 > wm)
     if (pending.nonEmpty) {
-      mergeInto(spark, root, readWal(spark, pending), buckets,
+      val updates = ParquetRead(spark, pending.map(_._2.toString))
+      mergeInto(spark, root, updates, buckets,
         walWatermark = Some(pending.map(_._1).max))
     }
     // reclaim everything the (possibly advanced) watermark now covers

@@ -17,9 +17,10 @@ import graft.schema.{CrawlStateUrl, FetchStatus}
   *    determinism.
   *
   * Exposed two ways, pinned against each other by UrlStateMergerSpec:
-  *  1. [[UrlStateMerger.mergeAll]] — an in-memory fold of one partition's
-  *     sightings through the [[UrlStateMerger.MergeBuf]] buffer, the
-  *     crawl round's merge (the reference's `MapState` per subtask);
+  *  1. [[UrlStateMerger.mergeOnto]] / [[UrlStateMerger.mergeAll]] — an
+  *     in-memory fold of one partition's sightings through the
+  *     [[UrlStateMerger.MergeBuf]] buffer, the crawl round's merge (the
+  *     reference's `MapState` per subtask);
   *  2. [[UrlStateMerger.mergeFrontier]] — the equivalent whole-stage-codegen
   *     columnar form for batch plans (conditional aggregation, no UDAF).
   */
@@ -113,10 +114,23 @@ object UrlStateMerger {
       nextFetchTime = b.lifeMinNext)
 
   /** One output row per url of `rows`, merged in memory. */
-  def mergeAll(rows: Iterator[CrawlStateUrl]): Iterator[CrawlStateUrl] = {
+  def mergeAll(rows: Iterator[CrawlStateUrl]): Iterator[CrawlStateUrl] =
+    mergeOnto(Iterator.empty, rows)
+
+  /** `base` (at most one row per url, e.g. a bucket file) merged with
+    * `updates`: only the updates are held in memory, keyed by url. Each
+    * base row streams through, merged when an update shares its url;
+    * the update-only urls follow.
+    */
+  def mergeOnto(
+      base: Iterator[CrawlStateUrl],
+      updates: Iterator[CrawlStateUrl]): Iterator[CrawlStateUrl] = {
     val bufs = new java.util.HashMap[String, MergeBuf]()
-    rows.foreach(r => bufs.put(r.url, reduce(bufs.getOrDefault(r.url, zero), r)))
-    scala.jdk.CollectionConverters.IteratorHasAsScala(
+    updates.foreach(r => bufs.put(r.url, reduce(bufs.getOrDefault(r.url, zero), r)))
+    base.map { r =>
+      val b = bufs.remove(r.url)
+      if (b == null) r else finish(reduce(b, r))
+    } ++ scala.jdk.CollectionConverters.IteratorHasAsScala(
       bufs.values().iterator()).asScala.map(finish)
   }
 

@@ -30,7 +30,7 @@ object ParquetRead {
     paths.grouped(math.max(1, perScan)).map(reader.parquet(_: _*)).reduce(_ union _)
   }
 
-  /** The data schema Spark's inference job finds for `path`: the one Spark
+  /** The schema Spark's inference job finds for `path`: the one Spark
     * recorded in the footer of its first data file when it wrote it, else
     * that file's parquet schema converted under the session conf (so
     * `spark.sql.legacy.parquet.nanosAsLong` and the other read confs
@@ -40,20 +40,13 @@ object ParquetRead {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    // the first data file, descending into `key=value` partition dirs
-    def firstFile(dir: Path): Option[org.apache.hadoop.fs.FileStatus] = {
-      val (files, dirs) = fs.listStatus(dir).toSeq
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
-        .partition(_.isFile)
-      files.find(_.getPath.getName.endsWith(".parquet")).orElse(
-        dirs.iterator.filter(_.getPath.getName.contains("="))
-          .flatMap(d => firstFile(d.getPath)).nextOption())
-    }
     val file =
       if (!fs.exists(p)) None
       else if (fs.getFileStatus(p).isFile) Some(fs.getFileStatus(p))
-      else firstFile(p)
+      else fs.listStatus(p).find { st =>
+        val n = st.getPath.getName
+        st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
     file.map { st =>
       ParquetFileFormat.readSchemaFromFooter(
         new Footer(st.getPath, footer(conf, st.getPath)),

@@ -35,24 +35,37 @@ class PartitionLocalRoundSpec extends AnyFunSuite {
         CrawlStateUrl(s"http://d$d.com/p$i", s"d$d.com", status, i.toLong, 1.0f, 0L)))
     val stored = rows(0, 3, "FETCHED")
     FrontierStore.mergeInto(spark, root, stored.toDF(), buckets = 64)
-    // one WAL batch routed for this partition count, one for another
-    val routed = rows(3, 2, "UNFETCHED")
-    val foreign = rows(5, 1, "UNFETCHED")
-    FrontierStore.appendWal(spark, root, routed.toDF(), 0L, buckets = 64, parts = 4)
-    FrontierStore.appendWal(spark, root, foreign.toDF(), 1L, buckets = 64, parts = 3)
+    // two pending WAL batches: p2 is also stored (the FETCHED row wins),
+    // p3 is sighted twice (the scores sum)
+    val wal = Seq(rows(2, 2, "UNFETCHED"), rows(3, 2, "UNFETCHED"))
+    wal.zipWithIndex.foreach { case (b, seq) =>
+      FrontierStore.appendWal(spark, root, b.toDF(), seq.toLong) }
     val conf = spark.sparkContext.broadcast(
       new SerializableWritable(spark.sparkContext.hadoopConfiguration))
     val got = FrontierStore.ownedRows(spark, root, 4, 64, conf)
       .mapPartitionsWithIndex((p, it) => it.map(r => (p, r))).collect().toSeq
     // the owner each row must sit in, by Spark's own bucket function
-    val owner = (stored ++ routed ++ foreign).map(_.pld).distinct.toDF("pld")
+    val owner = stored.map(_.pld).distinct.toDF("pld")
       .select(col("pld"), (pmod(xxhash64(col("pld")), lit(64)) % 4).cast("int"))
       .as[(String, Int)].collect().toMap
     assert(owner.values.toSet == Set(0, 1, 2, 3), s"40 domains leave an owner empty: $owner")
     val misplaced = got.filter { case (p, r) => owner(r.pld) != p }
     assert(misplaced.isEmpty, s"rows outside their owner: ${misplaced.take(3)}")
-    assert(got.map(_._2).sortBy(r => (r.url, r.status)) ==
-      (stored ++ routed ++ foreign).sortBy(r => (r.url, r.status)))
+    val merged = graft.operators.UrlStateMerger
+      .mergeFrontier((stored ++ wal.flatten).toDF()).as[CrawlStateUrl].collect()
+    assert(got.map(_._2).sortBy(_.url) == merged.toSeq.sortBy(_.url))
+    assert(got.map(_._2).count(_.score == 2.0f) == 40)
+  }
+
+  test("a crawl with no valid seeds against a fresh store ends after one round") {
+    Seq(Seq.empty[(String, Float)], Seq(("not a url", 1.0f))).foreach { seeds =>
+      val root = java.nio.file.Files.createTempDirectory("graft-noseeds").toString
+      val r = CrawlTopology.run(spark, seeds, new WebGraphFetcher(WebGraph()),
+        new MapRobotsFetcher(Map.empty), CrawlConfig(maxRounds = 3, frontierRoot = Some(root)))
+      assert(r.rounds == 1)
+      assert(r.frontier.count() == 0)
+      assert(FrontierStore.readResolved(spark, root).forall(_.count() == 0))
+    }
   }
 
   test("a seam task attempt that fails after fetching retries to the same candidates, no duplicate WAL or journal rows") {

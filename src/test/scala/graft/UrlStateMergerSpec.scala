@@ -102,6 +102,16 @@ class UrlStateMergerSpec extends AnyFunSuite {
         .as[CrawlStateUrl].collect().map(key).toSet
       assert(inMemory == columnar, s"seed $seed: only in-memory " +
         s"${(inMemory -- columnar).take(3)}, only columnar ${(columnar -- inMemory).take(3)}")
+      // streamed: one row per url (a bucket file) merged with raw sightings
+      val (early, late) = shuffled.splitAt(shuffled.size / 2)
+      val base = UrlStateMerger.mergeAll(early.iterator).toSeq
+      val streamed = UrlStateMerger.mergeOnto(base.iterator, late.iterator).map(key).toSeq
+      val columnarOnto = UrlStateMerger.mergeFrontier((base ++ late).toDF().repartition(3))
+        .as[CrawlStateUrl].collect().map(key).toSet
+      assert(streamed.size == streamed.toSet.size, s"seed $seed: a url twice")
+      assert(streamed.toSet == columnarOnto, s"seed $seed: only streamed " +
+        s"${(streamed.toSet -- columnarOnto).take(3)}, only columnar " +
+        s"${(columnarOnto -- streamed.toSet).take(3)}")
     }
   }
 }
