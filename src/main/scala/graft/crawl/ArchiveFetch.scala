@@ -155,8 +155,8 @@ object ArchiveFetch {
     *    shards and WARC segments the URLs live in are opened. At the
     *    reference's ~1 GB segment sizes a full scan per trickle round
     *    reads the whole archive; the pruned path reads a handful of
-    *    files (crossover measured in CdxBench — segment size is the
-    *    lever, not row count).
+    *    files (PERF_NOTES "CDX-pruned archive lookup": segment size is
+    *    the lever, not row count).
     *  - bigger rounds (or no sidecar) → [[fromWarc]]'s batch equi-join,
     *    which beats per-key lookups once the fetch set is a meaningful
     *    fraction of the archive.

@@ -1,7 +1,7 @@
 package graft.crawl
 
 import org.apache.spark.SerializableWritable
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.Platform
@@ -84,7 +84,7 @@ final case class CrawlConfig(
     // replay-exact via the manifest watermark); the full bucketed write
     // cycle — merge read, B bucket files, sidecars — runs on this
     // cadence instead of every round. Higher = cheaper rounds but a
-    // longer WAL for readResolved to fold and for a resume to replay;
+    // longer WAL for each owner to read and for a resume to replay;
     // 1 = the pre-WAL commit-every-round behavior
     frontierCompactEvery: Int = 8,
     // driver-plan hygiene: journal/parsed accumulators are compacted
@@ -106,17 +106,6 @@ final case class CrawlConfig(
     // threads instead of tasks. 1 = serial (deterministic test path).
     robotsThreads: Int = 10,
     fetchThreads: Int = 10,
-    // broadcast fence for the sitemap round state (seenSitemaps, a
-    // sitemap-cardinality frame): it rides a broadcast anti-join because
-    // its cardinality is normally millions at most, but at an extreme
-    // (100 M+ PLDs) a per-round broadcast is itself the bottleneck. Past
-    // this row count (domains plus seen sitemaps) the join drops its
-    // broadcast hint and plans as a partitioned join — the same fence
-    // discipline the stores' tombstone anti-join uses (StoreProtocol's
-    // size switch). Cardinality is re-checked every `compactEvery` rounds
-    // (the domain count rides the seam pass; the sitemap count is one
-    // amortized action, not a per-round one)
-    broadcastStateMaxRows: Long = 10000000L,
     // URL-shape quality gate at frontier-insert time (the RefinedWeb/C4
     // URL-filtering slot, operators.UrlQuality): trap-shaped URLs (deep
     // paths, parameter explosions, digit-dominated, over-long) are
@@ -244,12 +233,11 @@ final case class Capture(url: String, ts: Long, fp: Long, capId: Long)
 /** One seam task's counts, summed by the pass's observation: the queue
   * depth, the eligible rows, the frontier's domains, whether it fetched,
   * the robots sitemap declarations, an upper bound on the new domains
-  * its outlinks add, and its domain state's size and score means.
+  * its outlinks add, and its domain state's score means.
   */
 final case class PassTally(
     queued: Long = 0L, eligible: Long = 0L, plds: Long = 0L, fetched: Long = 0L,
-    sitemaps: Long = 0L, outPlds: Long = 0L, domains: Long = 0L,
-    scored: Long = 0L, avgSum: Double = 0.0)
+    sitemaps: Long = 0L, outPlds: Long = 0L, scored: Long = 0L, avgSum: Double = 0.0)
 
 /** One row out of a round's partition-local pass; exactly one field is
   * set. The state rows (`front` — the in-memory frontier — `domain`,
@@ -572,7 +560,7 @@ object CrawlTopology {
       }
       val avgs = o.domains.valuesIterator.flatMap(_.avg).toVector
       tally.copy(fetched = math.min(fetched, 1L), outPlds = outPlds.size,
-        domains = o.domains.size, scored = avgs.size, avgSum = avgs.sum)
+        scored = avgs.size, avgSum = avgs.sum)
     }
   }
 
@@ -672,10 +660,10 @@ object CrawlTopology {
     var journalPending = 0
     var parsedAcc = emptyParsed
     var parsedPending = 0
-    def journal(round: Int, stage: String, rows: DataFrame): Unit = {
+    // `rows` carry (stage, url, status)
+    def journalStages(round: Int, rows: DataFrame): Unit = {
       journalAcc = journalAcc.unionByName(rows
         .withColumn("round", lit(round))
-        .withColumn("stage", lit(stage))
         .select("round", "stage", "url", "status"))
       journalPending += 1
       if (journalPending >= cfg.compactEvery) {
@@ -683,6 +671,8 @@ object CrawlTopology {
         journalPending = 0
       }
     }
+    def journal(round: Int, stage: String, rows: DataFrame): Unit =
+      journalStages(round, rows.withColumn("stage", lit(stage)))
 
     cfg.terminator.foreach(_.open())
 
@@ -756,8 +746,8 @@ object CrawlTopology {
     journal(0, "seed", seedRows.select(col("url"), col("status")))
 
     // observed on each pass: the mean pldAvg of the scored domains (the
-    // quota's global reference) and the domain count (broadcast fence)
-    var (globalAvg, domainRows) = (0.0, 0L)
+    // quota's global reference)
+    var globalAvg = 0.0
     // an upper bound on the frontier's domains, None when unknown: while
     // every domain's largest quota fits the queue, no global cut can bind
     var pldBound: Option[Long] = None
@@ -771,16 +761,8 @@ object CrawlTopology {
     // round for the crawl's lifetime)
     var seenSitemaps: DataFrame = Seq.empty[String].toDF("sitemapUrl")
 
-    // broadcast fence (CrawlConfig.broadcastStateMaxRows): true while the
-    // round state is broadcast-sized; flipped off permanently once its
-    // cardinality crosses the fence (domains only accumulate). Surfaced
-    // as the `domain_state_broadcast` gauge.
-    var broadcastDomainState = true
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (broadcastDomainState) broadcast(df) else df
-
     val tallyCols = Seq("queued", "eligible", "plds", "fetched", "sitemaps",
-      "outPlds", "domains", "scored", "avgSum").map(f => sum(col(s"tally.$f")).as(f))
+      "outPlds", "scored", "avgSum").map(f => sum(col(s"tally.$f")).as(f))
     def stateOf(out: Dataset[RoundRow]) =
       out.filter(col("seam").isNull && col("tally").isNull).as[RoundRow]
 
@@ -871,8 +853,24 @@ object CrawlTopology {
         // failure LiveCrawlBench exists to catch)
         gauges += ((round, "fetch_tasks", Observed.long(foldObs, "fetched")))
         val sitemapCount = Observed.long(passObs, "sitemaps")
-        def stageRows(stage: String) = seam.filter(col("stage") === stage)
-        journal(round, "robots", stageRows("robots").select(col("url"), col("status")))
+        // the seam's journal stages as ONE append, so the journal
+        // compaction (every compactEvery appends) stays that many rounds
+        // apart: a refused row is its robots or politeness row; a fetch
+        // row is its fetch row plus its parse_failed row, or its parse row
+        // when the page parsed with a positive score (the pages parsedAcc
+        // keeps)
+        def stageEntry(stage: Column, status: Column) =
+          struct(stage.as("stage"), status.as("status"))
+        journalStages(round, seam
+          .filter(col("stage").isin("robots", "politeness", "fetch"))
+          .select(col("url"), explode(array(
+            stageEntry(col("stage"), col("status")),
+            when(col("parse") === "failed",
+              stageEntry(lit("parse_failed"), lit(FS.ERROR_PARSE))),
+            when(col("parse") === "ok" && col("score") > 0.0f,
+              stageEntry(lit("parse"), lit(FS.FETCHED))))).as("entry"))
+          .filter(col("entry").isNotNull)
+          .select(col("entry.stage"), col("url"), col("entry.status")))
 
         // --- sitemap discovery: fetch+parse each sitemap ONCE per crawl —
         // the anti-join against seenSitemaps keeps an active domain's
@@ -886,7 +884,7 @@ object CrawlTopology {
             val sitemapFetches = seam
               .select(col("pld"), explode(col("sitemaps")).as("sitemapUrl"))
               .distinct()
-              .join(maybeBroadcast(seenSitemaps), Seq("sitemapUrl"), "left_anti")
+              .join(seenSitemaps, Seq("sitemapUrl"), "left_anti")
               .select(col("pld"), col("sitemapUrl"))
               .repartition(seamParts, col("sitemapUrl"))
               .as[(String, String)]
@@ -927,10 +925,7 @@ object CrawlTopology {
             sitemapFetches.flatMap(_._3.map(u => (u, 1.0f)))
           }
 
-        journal(round, "politeness",
-          stageRows("politeness").select(col("url"), col("status")))
-        val fetched = stageRows("fetch")
-        journal(round, "fetch", fetched.select(col("url"), col("status")))
+        val fetched = seam.filter(col("stage") === "fetch")
 
         // content tap: every fetch ATTEMPT (with response headers) flows
         // to the configured sink — WARC archiving, content parquet,
@@ -945,9 +940,6 @@ object CrawlTopology {
             lit(now).as("fetchTimeMs"), col("redirectedTo")))
         }
 
-        journal(round, "parse_failed",
-          fetched.filter(col("parse") === "failed")
-            .select(col("url"), lit(FS.ERROR_PARSE).as("status")))
         val parsedPages = fetched.filter(col("parse") === "ok")
         val parsedOut = parsedPages
           .filter(col("score") > 0.0f)
@@ -959,8 +951,6 @@ object CrawlTopology {
           parsedAcc = parsedAcc.coalesce(seamParts).localCheckpoint(true)
           parsedPending = 0
         }
-        journal(round, "parse",
-          parsedOut.select(col("url"), lit(FS.FETCHED).as("status")))
 
         // --- close the loop: clean new URLs, merge everything
         // (the 4-way union at CrawlTopologyBuilder.java:433-437)
@@ -999,19 +989,10 @@ object CrawlTopology {
       val scored = Observed.long(foldObs, "scored")
       globalAvg =
         if (scored == 0L) 0.0 else Observed.number(foldObs, "avgSum").doubleValue() / scored
-      domainRows = Observed.long(foldObs, "domains")
       // flat per-round wall time is the long-crawl invariant the journal
       // compaction / score pruning / seen-sitemaps state exist to hold;
       // surfacing it as a gauge lets benches assert it directly
       gauges += ((round, "round_ms", (System.nanoTime() - roundT0) / 1000000))
-      // amortized fence re-check: one sitemap count per compactEvery
-      // rounds, and only while still broadcasting (past the fence there
-      // is nothing left to decide — domain state only grows)
-      if (broadcastDomainState && round % math.max(1, cfg.compactEvery) == 0
-          && domainRows + seenSitemaps.count() > cfg.broadcastStateMaxRows)
-        broadcastDomainState = false
-      gauges += ((round, "domain_state_broadcast",
-        if (broadcastDomainState) 1L else 0L))
     }
 
     // fold any WAL tail into the bucketed table: the at-rest store reads

@@ -41,10 +41,7 @@ import graft.util.ParquetRead
   * read path, no per-bucket directory listings).
   *
   * Bucketing by pld hash keeps the merge shuffle stable round-over-round
-  * and lets per-domain lookups prune to one bucket directory. Stores
-  * written by the pre-generation layout (`b<bucket>/v<ver>` dirs, plain
-  * manifest entries) read transparently and migrate bucket-by-bucket as
-  * commits touch them.
+  * and lets per-domain lookups prune to one bucket directory.
   */
 object FrontierStore {
 
@@ -79,15 +76,13 @@ object FrontierStore {
     }
   }
 
-  /** A bucket's location token: `g<N>` = generation layout
-    * (`<root>/g<N>/bucket=<b>`), a bare integer = legacy layout
-    * (`<root>/b<b>/v<ver>`).
+  /** A bucket's location: the generation token `g<N>` names
+    * `<root>/g<N>/bucket=<b>`.
     */
   private def bucketLoc(root: String, b: Int, tok: String): String =
     s"$root/${relLoc(b, tok)}"
 
-  private def relLoc(b: Int, tok: String): String =
-    if (tok.startsWith("g")) s"$tok/bucket=$b" else s"b$b/v$tok"
+  private def relLoc(b: Int, tok: String): String = s"$tok/bucket=$b"
 
   /** (bucket count, bucket -> location token, retire-log, WAL
     * watermark) for manifest version `v`. The bucket count is a
@@ -120,6 +115,11 @@ object FrontierStore {
       .filterNot(l => l.startsWith("retire ") || l.startsWith("wal "))
       .map { line =>
         val Array(b, tok) = line.trim.split(" ")
+        if (!tok.startsWith("g"))
+          throw new IllegalStateException(
+            s"$root/_MANIFEST_v$v maps bucket $b to '$tok': the legacy " +
+              "b<bucket>/v<ver> layout is not readable by the generation " +
+              "store; rebuild it with mergeInto on a fresh root")
         b.toInt -> tok
       }.toMap
     (buckets, entries, retire, walWm)
@@ -195,15 +195,6 @@ object FrontierStore {
   def mergeInto(
       spark: SparkSession, root: String, updates: DataFrame,
       buckets: Int = 64, walWatermark: Option[Long] = None): DataFrame = {
-    // commit-phase walls to stderr when -Dgraft.frontier.phases=true —
-    // the LiveCrawlBench A/B's attribution hook, zero cost when off
-    val phasesOn = java.lang.Boolean.getBoolean("graft.frontier.phases")
-    var phaseT0 = System.nanoTime()
-    def phase(name: String): Unit = if (phasesOn) {
-      val t = System.nanoTime()
-      System.err.println(f"[frontier-phase] $name ${(t - phaseT0) / 1e6}%.0f ms")
-      phaseT0 = t
-    }
     val f = fs(spark, root)
     val prev = latestVersion(spark, root)
     val (storeBuckets, prevManifest, prevRetire, prevWalWm) = prev
@@ -241,7 +232,6 @@ object FrontierStore {
         val tagged = updates.withColumn("bucket", bucketOf(buckets))
           .observe(obs, collect_set(col("bucket")).as("buckets"))
           .localCheckpoint(true)
-        phase("pin")
         val got: Seq[Int] = obs.get.get("buckets") match {
           case Some(s: scala.collection.Seq[_]) =>
             s.map(_.asInstanceOf[Int]).sorted.toSeq
@@ -286,7 +276,6 @@ object FrontierStore {
       .repartition(
         math.min(buckets, spark.sparkContext.defaultParallelism), col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(genDir)
-    phase("write")
     // ONE listing decides which affected buckets wrote data; a bucket
     // whose every row was REMOVED writes no dir and leaves the manifest
     // entirely (readers skip unmapped buckets). On the fresh-store path
@@ -342,7 +331,6 @@ object FrontierStore {
     // the next commit
     val newRetire = affected
       .flatMap(b => prevManifest.get(b).map(tok => relLoc(b, tok)))
-    phase("sidecars")
     writeManifest(spark, root, next, buckets, manifest, newRetire,
       math.max(prevWalWm, walWatermark.getOrElse(-1L)))
     graft.util.FsAtomic.writePointer(
@@ -350,30 +338,17 @@ object FrontierStore {
 
     // reclaim what the PREVIOUS commit superseded (now two generations
     // old — no reader can still hold it), plus drop manifests older than
-    // the previous one. Legacy buckets (pre-generation layout) migrate
-    // here: any extra v-dirs the old layout's one-generation retention
-    // kept are swept the first time a commit touches the bucket.
-    phase("flip")
+    // the previous one
     reclaim(f, root, prevRetire)
-    affected.foreach { b =>
-      prevManifest.get(b).filterNot(_.startsWith("g")).foreach { keepTok =>
-        val dir = new Path(s"$root/b$b")
-        if (f.exists(dir)) f.listStatus(dir).foreach { st =>
-          if (st.getPath.getName != s"v$keepTok") f.delete(st.getPath, true)
-        }
-      }
-    }
     (0 until next - 1).foreach { old =>
       f.delete(new Path(root, s"_MANIFEST_v$old"), false)
     }
-    phase("reclaim")
     read(spark, root).getOrElse(updates.limit(0))
   }
 
   /** Batched best-effort reclamation of superseded bucket locations:
     * delete each named relative path, then drop parent dirs that hold no
-    * bucket data anymore (a generation whose every bucket was superseded,
-    * a legacy `b<bucket>` dir emptied by migration).
+    * bucket data anymore (a generation whose every bucket was superseded).
     */
   private def reclaim(
       f: org.apache.hadoop.fs.FileSystem, root: String,
@@ -451,11 +426,12 @@ object FrontierStore {
   // fixed per-round cost LiveCrawlBench measured as the live-crawl
   // throughput limiter. The WAL makes the round commit ONE small
   // single-file parquet append; the bucketed fold runs every
-  // `frontierCompactEvery` rounds instead. A crawl round reads each
-  // owner's bucket files and WAL rows in its own task
-  // ([[ownedRows]]); other readers get the exact merged view via
-  // [[readResolved]] (store ∪ pending WAL, resolved with broadcast-sized
-  // joins — the big store side is never shuffled).
+  // `frontierCompactEvery` rounds instead. [[ownedRows]] is the one
+  // reader of the store merged with its pending WAL: a crawl round reads
+  // each owner's bucket files and WAL rows in its own task. (One-shot
+  // merge over raw WAL rows equals the iterated per-round fold:
+  // [[graft.operators.UrlStateMerger]]'s buffer is a sufficient
+  // statistic — scores sum, times max/min, winners by total order.)
   // Exactly-once across crashes: the manifest's `wal <seq>` watermark
   // records the highest folded batch; replay skips batches at or below
   // it, so a crash between the fold commit and the WAL deletes cannot
@@ -594,38 +570,6 @@ object FrontierStore {
       }
   }
 
-  /** The exact merged frontier: bucketed store resolved against the
-    * pending WAL batches. The store side passes through broadcast-sized
-    * semi/anti joins on the WAL's url set — never a full-store shuffle;
-    * only WAL rows and the store rows they touch go through the merge
-    * aggregation. (One-shot merge over raw WAL rows equals the iterated
-    * per-round fold: [[graft.operators.UrlStateMerger]]'s buffer is a
-    * sufficient statistic — scores sum, times max/min, winners by total
-    * order.)
-    */
-  def readResolved(spark: SparkSession, root: String): Option[DataFrame] = {
-    val f = fs(spark, root)
-    val wm = currentWalWm(spark, root)
-    val pending = walBatches(f, root).filter(_._1 > wm)
-    val stored = read(spark, root)
-    val wal =
-      if (pending.isEmpty) None
-      else Some(ParquetRead(spark, pending.map(_._2.toString)))
-    (stored, wal) match {
-      case (None, None) => None
-      case (Some(s), None) => Some(s)
-      case (None, Some(w)) => Some(UrlStateMerger.mergeFrontier(w))
-      case (Some(s), Some(w)) =>
-        // no distinct: a duplicate build key changes neither join, and a
-        // dedup would add a shuffle stage to every crawl round's schedule
-        val keys = w.select("url")
-        val touched = s.join(keys, Seq("url"), "left_semi")
-          .unionByName(w.select(s.columns.map(col): _*))
-        val untouched = s.join(keys, Seq("url"), "left_anti")
-        Some(UrlStateMerger.mergeFrontier(touched).unionByName(untouched))
-    }
-  }
-
   /** Fold every pending WAL batch into the bucketed table (one
     * [[mergeInto]] carrying the new watermark), then reclaim the folded
     * WAL dirs. Crash-safe at every point: before the manifest lands the
@@ -657,10 +601,7 @@ object FrontierStore {
       spark: SparkSession, root: String, pld: String): Option[DataFrame] =
     latestVersion(spark, root).flatMap { v =>
       val (buckets, manifest, _, _) = readManifest(spark, root, v)
-      // same bucket function the writer uses, evaluated by Spark itself
-      val b = spark.range(1)
-        .select(pmod(xxhash64(lit(pld)), lit(buckets)).cast("int"))
-        .head().getInt(0)
+      val b = bucketOf(pld, buckets)
       manifest.get(b).map { tok =>
         ParquetRead(spark, Seq(bucketLoc(root, b, tok)))
           .filter(col("pld") === pld)

@@ -62,10 +62,6 @@ object RobotsRules {
   val deferAll: RobotsRules =
     RobotsRules(Seq("/" -> false), None, Nil, deferVisits = true)
 
-  /** Back-compat helper: plain Disallow prefixes. */
-  def disallowing(prefixes: String*): RobotsRules =
-    RobotsRules(prefixes.map(_ -> false), None, Nil)
-
   /** Map a fetched robots.txt response to DEFINITIVE rules: 2xx →
     * parsed body, 4xx (no robots.txt) → allow-all, anything else
     * (5xx / exception sentinel / unreachable) → None. The ONE status

@@ -41,9 +41,9 @@ import graft.util.StoreProtocol
   *    retrains on the standing corpus into a FRESH root and
   *    [[setCurrent]] flips the active-root pointer atomically.
   *
-  * Recall follows the nprobe/centroid geometry measured in RecallBench
-  * (km-IVF .956/.995 at nprobe 1/2 on clustered fixtures); with
-  * `nprobe = centroids` the search is exhaustive and EXACTLY equals
+  * Recall follows the nprobe/centroid geometry measured in PERF_NOTES
+  * "ANN recall on CLUSTERED embeddings" (km-IVF .956/.995 at nprobe 1/2);
+  * with `nprobe = centroids` the search is exhaustive and EXACTLY equals
   * brute-force cosine top-K (spec-pinned).
   */
 object AnnIndexStore {

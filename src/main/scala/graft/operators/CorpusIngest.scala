@@ -553,8 +553,8 @@ object CorpusIngest {
         * count reaches this threshold — a policy on observable store
         * state (one driver-side listing per batch), not an operator
         * cadence, so a loop whose owner never tunes the knob still gets
-        * flat per-batch walls (RollingWindowBench measured +28% batch
-        * wall over 40 batches with compaction off). The check runs
+        * flat per-batch walls (PERF_NOTES "Round 14": +28% batch wall
+        * over 40 batches with compaction off). The check runs
         * between batches like the manual cadence, so the single-writer
         * safety argument is unchanged; a kill mid-pass leaves an
         * unflipped `c<gen>` dir that the next triggered pass overwrites
@@ -631,8 +631,8 @@ object CorpusIngest {
           // `srcBatch` column) bounds this pass to the expiring band —
           // without the hint, finding affected slices is a column-pruned
           // scan of EVERY prior slice, a per-batch cost that grows with
-          // stream age (measured: +30% batch wall over 40 batches,
-          // RollingWindowBench). Arbitrary takedown feeds without the
+          // stream age (+30% batch wall over 40 batches, PERF_NOTES
+          // "Round 14"). Arbitrary takedown feeds without the
           // column keep the full scan.
           val hinted =
             if (!ids.columns.contains("srcBatch")) None

@@ -232,9 +232,10 @@ object SignatureIndexStore {
     * read as EXPLICIT `bucket=` paths (batch bucket sets come from the
     * commit markers, the snapshot's from one listing of its dir): eager
     * partition discovery over batches × buckets directories would
-    * otherwise grow with loop age — the cost class AnnBench measured on
-    * the ANN store. The two file sets are read separately (their
-    * partition-column layouts differ) and unioned by name.
+    * otherwise grow with loop age — the cost class PERF_NOTES "Durable ANN
+    * index vs brute force" measured on the ANN store. The two file sets
+    * are read separately (their partition-column layouts differ) and
+    * unioned by name.
     */
   private def readTable(
       spark: SparkSession, root: String, table: String, schema: StructType,

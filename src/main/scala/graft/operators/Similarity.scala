@@ -26,33 +26,6 @@ import graft.plans.VectorExpressions
   */
 object Similarity {
 
-  /** dot(a, b) as a left-fold in doubles. */
-  def dotSql(a: String, b: String, dim: Int): String =
-    s"""aggregate(transform(sequence(0, ${dim - 1}), d ->
-       | cast(element_at($a, d + 1) as double) * cast(element_at($b, d + 1) as double)),
-       | cast(0 as double), (s, v) -> s + v)""".stripMargin.replaceAll("\n", " ")
-
-  def normSql(a: String, dim: Int): String =
-    s"sqrt(${dotSql(a, a, dim)})"
-
-  def cosineSql(a: String, b: String, dim: Int): String =
-    s"${dotSql(a, b, dim)} / (${normSql(a, dim)} * ${normSql(b, dim)})"
-
-  /** Deterministic pseudo-random hyperplane coefficient for (plane j,
-    * dim d): ((j*31 + d*17) mod 7) - 3, an integer in [-3, 3].
-    */
-  def planeCoefSql(j: String, d: String): String =
-    s"(($j * 31 + $d * 17) % 7) - 3"
-
-  /** Sign-bit bucket id from `numPlanes` hyperplanes. */
-  def bucketSql(vec: String, dim: Int, numPlanes: Int): String =
-    s"""aggregate(transform(sequence(0, ${numPlanes - 1}), j ->
-       | CASE WHEN aggregate(transform(sequence(0, ${dim - 1}), d ->
-       |     cast(element_at($vec, d + 1) as double) * (${planeCoefSql("j", "d")})),
-       |     cast(0 as double), (s, v) -> s + v) > 0
-       |   THEN shiftleft(1L, j) ELSE 0L END),
-       | 0L, (acc, x) -> acc + x)""".stripMargin.replaceAll("\n", " ")
-
   /** Exact top-K cosine neighbors for each query vector. `queries` and
     * `corpus` must both have (idCol, vecCol); queries are broadcast-sized
     * (that has always been this operator's scale contract — the previous
@@ -428,10 +401,11 @@ object Similarity {
     * argmax runs per row inside one UDF. The earlier broadcast-join +
     * per-vid window form expanded every vector × every centroid AND
     * carried the vector array through that expansion — at 2M vectors ×
-    * 1024 cells that intermediate is ~600 GB (measured OOM in AnnBench);
-    * this form is O(cells × dim) arithmetic per row with nothing
-    * materialized. Semantics unchanged and bit-identical: sequential
-    * double dot folds (the [[graft.plans.VectorCodegen]] kernels' order)
+    * 1024 cells that intermediate is ~600 GB (an OOM, PERF_NOTES "Durable
+    * ANN index vs brute force"); this form is O(cells × dim) arithmetic
+    * per row with nothing materialized. Semantics unchanged and
+    * bit-identical: sequential double dot folds (the
+    * [[graft.plans.VectorCodegen]] kernels' order)
     * and ties keep the smallest cent_id (ascending scan, strict `>`).
     */
   def ivfAssign(
@@ -1073,8 +1047,8 @@ object Similarity {
     * tight semantic cluster the PQ quantization error exceeds the true
     * neighbor gaps, so pure-ADC RANKING is noise there even though the
     * true top-k almost always survive into the shortlist (measured on
-    * the clustered RecallBench fixture: m=16 ADC recall@5 0.20, same
-    * codes + rerank 0.90+).
+    * the clustered fixture of PERF_NOTES "ANN recall on CLUSTERED
+    * embeddings": m=16 ADC recall@5 0.20, same codes + rerank 0.90+).
     *
     * Scale shape: the shortlist is |queries| x shortlist rows — tiny —
     * and BROADCASTS against the corpus's id-equi-join, so the exact pass
@@ -1113,7 +1087,8 @@ object Similarity {
     * one-time shuffle at build, amortized over every query); query =
     * broadcast probes + broadcast ADC tables over the cell-filtered code
     * rows, partial-agg sums, per-query top-k. For cosine semantics
-    * normalize corpus and query vectors first (see RecallBench).
+    * normalize corpus and query vectors first (PERF_NOTES "ANN recall on
+    * CLUSTERED embeddings").
     */
   def ivfPqTopK(
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,

@@ -643,11 +643,6 @@ object TextOps {
   def preTokenCount(c: Column): Column =
     size(regexp_extract_all(c, lit(PreTokenPattern), lit(0))).cast("long")
 
-  /** @deprecated naming: this counts GPT-2-style PRE-tokens, not merged
-    * BPE tokens — use [[preTokenCount]]; kept as an alias for callers.
-    */
-  def bpeTokenCount(c: Column): Column = preTokenCount(c)
-
   /** Karp–Rabin rolling fingerprint of the canonical text (lowercased,
     * alphanumerics only): left fold h = (h*131 + code) mod 1e9+7 seeded
     * with the first char code; 0 for empty canonical text. Sequential

@@ -1,7 +1,8 @@
 package graft.plans
 
-/** Physical-plan shape checks shared by the flat-plan gates (TrainingCorpus
-  * capstone spec, CorpusBench) and ad-hoc tooling.
+/** Physical-plan shape checks shared by the flat-plan gates (the
+  * TrainingCorpus capstone spec; PERF_NOTES "TrainingCorpus.build
+  * end-to-end at sf1") and ad-hoc tooling.
   *
   * Spark prints physical nodes WITHOUT the `Exec` suffix (`WindowExec` →
   * `Window`), so a scan greping "WindowExec" never fires — a silent

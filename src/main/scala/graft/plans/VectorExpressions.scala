@@ -78,9 +78,11 @@ object VectorCodegen {
     bestId
   }
 
-  /** Random-hyperplane LSH bucket: sign bits of `numPlanes` dots with the
-    * deterministic plane coef ((j*31 + d*17) mod 7) - 3 (must stay in sync
-    * with Similarity.planeCoefSql).
+  /** Random-hyperplane LSH bucket: bit j is set iff the dot of `v` with
+    * plane j is positive, summed in doubles over d in order. Plane j's
+    * coefficient for dimension d is the deterministic pseudo-random
+    * integer ((j*31 + d*17) mod 7) - 3, in [-3, 3]; the DuckDB oracle
+    * strings of the LSH queries spell the same formula.
     */
   def lshBucketF(v: ArrayData, numPlanes: Int): Long = {
     val dim = v.numElements()

@@ -856,9 +856,9 @@ object Crawler {
     * real merge path, then read under a statusTime band — the gate is
     * value-identity with the plain filter (prune SOUNDNESS; the
     * files-opened fraction is pinned in DataSkippingStoreSpec and
-    * measured in FrontierBench). Same unique-url fixture discipline as
-    * q119, so the merge is row-preserving and the oracle is a pure
-    * projection + filter.
+    * measured in PERF_NOTES "Round 15"). Same unique-url fixture
+    * discipline as q119, so the merge is row-preserving and the oracle is
+    * a pure projection + filter.
     */
   def frontierBandedRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.crawl.FrontierStore

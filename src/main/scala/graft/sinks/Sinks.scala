@@ -319,17 +319,6 @@ object Sinks {
   def writeParsedTsv(parsed: DataFrame, path: String): Unit =
     parsedTextTsv(parsed).write.mode("overwrite").text(path)
 
-  /** The analytics-engine content sink: pages as parquet partitioned by
-    * pld bucket so frontier joins prune partitions.
-    */
-  def writeContentParquet(fetched: DataFrame, path: String,
-      buckets: Int = 64): Unit =
-    fetched
-      .withColumn("pld_bucket", pmod(hash(col("pld")), lit(buckets)))
-      .write.mode("overwrite")
-      .partitionBy("pld_bucket")
-      .parquet(path)
-
   /** CDX capture index over an archive's records (the web-archive lookup
     * sidecar: CommonCrawl publishes exactly this next to its WARC
     * segments; the reference's CommonCrawlFetcher navigates the crawl via

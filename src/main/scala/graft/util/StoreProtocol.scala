@@ -218,13 +218,6 @@ object StoreProtocol {
     */
   def tombBytesLine(n: Long): String = s"tombbytes $n"
 
-  /** The `tombbytes` size a committed batch's marker carries, if any. */
-  def markerTombBytes(
-      spark: SparkSession, root: String, batchId: Long): Option[Long] =
-    readSmall(fs(spark, root), new Path(root, s"_commit_$batchId"))
-      .flatMap(_.linesIterator.find(_.startsWith("tombbytes ")))
-      .map(_.stripPrefix("tombbytes ").trim.toLong)
-
   /** The live tombstone set across `batches`, as (id, batch). Paths come
     * from the commit markers' "tombs" line — a marker without one (every
     * pure data batch) contributes nothing and costs no filesystem call.

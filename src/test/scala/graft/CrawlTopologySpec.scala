@@ -411,41 +411,6 @@ class UrlShapeGateSpec extends AnyFunSuite {
     assert(drop.exists(x => x.getInt(0) == 0 && x.getString(1).contains("a=1")),
       drop.mkString(","))
   }
-
-  test("domain-state broadcast fence: past the cap the crawl plans without the hint, facts identical") {
-    // toy-scale proof of the 100M-PLD fence (broadcastStateMaxRows):
-    // threshold 0 trips the amortized check after round 1, so most of
-    // the crawl runs with partitioned joins for domainClocks/quotas/
-    // seenSitemaps — and must produce EXACTLY the frontier + journal
-    // facts of the default broadcast path
-    def facts(r: CrawlResult) = (
-      r.frontier.select("url", "status").collect()
-        .map(x => (x.getString(0), x.getString(1))).toSet,
-      r.journal.groupBy("stage", "status").count().collect()
-        .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet)
-    // a robots crawl-delay populates domainClocks (the fence counts
-    // clock + sitemap rows; an empty state never crosses any cap)
-    val delayRobots = new MapRobotsFetcher(Map(
-      "http://domain1.com/robots.txt" ->
-        "User-agent: *\nCrawl-delay: 1\n"))
-    val base = CrawlTopology.run(spark, Seq(("domain1.com", 1.0f)),
-      fetcher, delayRobots,
-      cfg = CrawlConfig(maxRounds = 8))
-    val fenced = CrawlTopology.run(spark, Seq(("domain1.com", 1.0f)),
-      fetcher, delayRobots,
-      cfg = CrawlConfig(maxRounds = 8,
-        broadcastStateMaxRows = 0L, compactEvery = 1))
-    assert(facts(fenced) == facts(base),
-      "fenced crawl diverged from the broadcast path")
-    // the fence actually engaged (gauge records post-check state, so a
-    // round-1 flip is legitimate) and stays engaged
-    val g = fenced.gauges
-      .collect { case (r, "domain_state_broadcast", v) => (r, v) }.sortBy(_._1)
-    assert(g.nonEmpty && g.last._2 == 0L, s"fence never engaged: $g")
-    assert(base.gauges.collect {
-      case (_, "domain_state_broadcast", v) => v }.forall(_ == 1L),
-      "default run must stay broadcast")
-  }
 }
 
 /** Shared fetch-count state for AdaptiveFetcher: a static map survives

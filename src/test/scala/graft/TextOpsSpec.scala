@@ -905,7 +905,7 @@ class FrontierStoreSpec extends AnyFunSuite {
     assert(slice.length == 1 && slice.head.getAs[String]("status") == "FETCHED")
   }
 
-  test("WAL: readResolved over appended batches equals the iterated per-round fold") {
+  test("WAL: ownedRows over appended batches equals the iterated per-round fold") {
     import spark.implicits._
     import graft.schema.CrawlStateUrl
     def batch(i: Int) = Seq(
@@ -923,7 +923,7 @@ class FrontierStoreSpec extends AnyFunSuite {
     val rootA = java.nio.file.Files.createTempDirectory("graft-walA").toString
     (0 to 3).foreach(i =>
       graft.crawl.FrontierStore.mergeInto(spark, rootA, batch(i), buckets = 4))
-    // path B: fold batch 0, append 1-3 as WAL, resolve on read
+    // path B: fold batch 0, append 1-3 as WAL, merge them in the owners' read
     val rootB = java.nio.file.Files.createTempDirectory("graft-walB").toString
     graft.crawl.FrontierStore.mergeInto(spark, rootB, batch(0), buckets = 4)
     (1 to 3).foreach { i =>
@@ -931,7 +931,7 @@ class FrontierStoreSpec extends AnyFunSuite {
       graft.crawl.FrontierStore.appendWal(spark, rootB, batch(i), seq)
     }
     val a = snap(graft.crawl.FrontierStore.read(spark, rootA).get)
-    val b = snap(graft.crawl.FrontierStore.readResolved(spark, rootB).get)
+    val b = snap(FrontierRows(spark, rootB, buckets = 4).toDF())
     assert(a == b, s"only-A: ${(a -- b).take(3)} only-B: ${(b -- a).take(3)}")
     // and compacting path B's WAL folds to the same state
     graft.crawl.FrontierStore.compactWal(spark, rootB, buckets = 4)
@@ -958,7 +958,7 @@ class FrontierStoreSpec extends AnyFunSuite {
       walWatermark = Some(0L))
     assert(new java.io.File(s"$root/_wal/w0").exists(), "crash precondition")
     // replay must SKIP the folded batch: score stays 2.0, not 3.0
-    val score = graft.crawl.FrontierStore.readResolved(spark, root).get
+    val score = FrontierRows(spark, root, buckets = 4)
       .filter(col("url") === "http://c.com/x")
       .select("score").head().getFloat(0)
     assert(score == 2.0f, s"watermark failed to fence the folded WAL: $score")
@@ -983,7 +983,7 @@ class FrontierStoreSpec extends AnyFunSuite {
     graft.crawl.FrontierStore.appendWal(spark, root,
       Seq(CrawlStateUrl("http://k.com/b", "k.com", "UNFETCHED", 20L, 1.0f, 0L))
         .toDF(), graft.crawl.FrontierStore.nextWalSeq(spark, root))
-    val resolved = graft.crawl.FrontierStore.readResolved(spark, root).get
+    val resolved = FrontierRows(spark, root, buckets = 4)
       .select("url", "status").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(resolved == Map(
@@ -1037,12 +1037,14 @@ class FrontierStoreSpec extends AnyFunSuite {
     sc.addJobTag("reads")
     try {
       val stored = graft.crawl.FrontierStore.read(spark, root).get
-      val resolved = graft.crawl.FrontierStore.readResolved(spark, root).get
-      assert(resolved.count() == 80)
+      // the owners' read parses the decimal score: the three WAL sightings
+      // of stored UNFETCHED urls sum to 3.0
+      val scores = FrontierRows(spark, root, buckets = 64)
+        .map(_.score).collect().groupBy(identity).map { case (s, n) => s -> n.length }
+      assert(scores == Map(1.5f -> 77, 3.0f -> 3), scores)
       graft.crawl.FrontierStore.compactWal(spark, root, buckets = 64)
       org.apache.spark.TestBus.drain(sc)
       assert(stored.schema("score").dataType.typeName == "decimal(10,2)")
-      assert(resolved.schema == stored.schema)
       assert(jobs.counts("reads").outsideSql.get == 0, jobs.counts("reads"))
     } finally {
       sc.removeJobTag("reads")
@@ -1050,60 +1052,43 @@ class FrontierStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a legacy b<bucket>/v<ver> store reads and migrates as commits touch it") {
+  test("domainSlice hashes the pld on the driver: building the slice starts no job") {
+    import spark.implicits._
+    import graft.schema.CrawlStateUrl
+    val root = java.nio.file.Files.createTempDirectory("graft-slice").toString
+    graft.crawl.FrontierStore.mergeInto(spark, root, (0 until 32)
+      .map(i => CrawlStateUrl(s"http://d$i.com/p", s"d$i.com", "UNFETCHED",
+        1L, 1.0f, 0L)).toDF(), buckets = 8)
+    val (slice, jobs) = JobsDuring(spark)(
+      graft.crawl.FrontierStore.domainSlice(spark, root, "d7.com"))
+    assert(jobs == 0, s"building the d7.com slice started $jobs job(s)")
+    assert(slice.get.select("url").as[String].collect().toSeq == Seq("http://d7.com/p"))
+  }
+
+  test("a legacy b<bucket>/v<ver> manifest fails loudly, naming the layout") {
     import spark.implicits._
     import graft.schema.CrawlStateUrl
     val root = java.nio.file.Files.createTempDirectory("graft-frontier4").toString
-    def pldBucket(pld: String): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(pld)), lit(4)).cast("int")).head().getInt(0)
-    // two plds guaranteed to live in DIFFERENT buckets (the migration
-    // sweep must touch one and spare the other)
-    val pldA = "a.com"
-    val pldB = Seq("b.com", "c.com", "d.com", "e.com", "f.com")
-      .find(p => pldBucket(p) != pldBucket(pldA)).get
-    // hand-build the pre-generation layout: two buckets at v0 + a plain
-    // manifest ("<bucket> <ver>" entries, no retire lines)
-    val rows = Seq(
-      CrawlStateUrl(s"http://$pldA/x", pldA, "UNFETCHED", 100L, 1.0f, 0L),
-      CrawlStateUrl(s"http://$pldB/y", pldB, "FETCHED", 100L, 2.0f, 9L))
-    val withB = rows.toDF()
-      .withColumn("bucket", pmod(xxhash64(col("pld")), lit(4)).cast("int"))
-    val buckets = withB.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    buckets.foreach { b =>
-      withB.filter(col("bucket") === b).drop("bucket")
-        .write.parquet(s"$root/b$b/v0")
+    // the pre-generation layout: a bucket dir at v0 and a plain manifest
+    // whose location token is a bare version number
+    Seq(CrawlStateUrl("http://a.com/x", "a.com", "UNFETCHED", 100L, 1.0f, 0L))
+      .toDF().write.parquet(s"$root/b0/v0")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(root, "_MANIFEST_v0"), "buckets 4\n0 0")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_LATEST"), "0")
+    val reads = Seq[() => Any](
+      () => graft.crawl.FrontierStore.read(spark, root),
+      () => graft.crawl.FrontierStore.domainSlice(spark, root, "a.com"),
+      () => graft.crawl.FrontierStore.mergeInto(spark, root,
+        Seq(CrawlStateUrl("http://a.com/y", "a.com", "UNFETCHED", 200L, 1.0f, 0L))
+          .toDF(), buckets = 4))
+    reads.foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("b<bucket>/v<ver>"), e.getMessage)
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_MANIFEST_v0"),
-      ("buckets 4" +: buckets.map(b => s"$b 0").toSeq).mkString("\n"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_LATEST"), "0")
-    // legacy store reads whole
-    val read0 = graft.crawl.FrontierStore.read(spark, root).get
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(read0 == Set(s"http://$pldA/x", s"http://$pldB/y"))
-    // a commit touching pldA migrates its bucket to the generation
-    // layout and (after the retention window) sweeps the legacy v-dirs
-    graft.crawl.FrontierStore.mergeInto(spark, root,
-      Seq(CrawlStateUrl(s"http://$pldA/x", pldA, "FETCHED", 200L, 1.0f, 9L))
-        .toDF(), buckets = 4)
-    graft.crawl.FrontierStore.mergeInto(spark, root,
-      Seq(CrawlStateUrl(s"http://$pldA/z", pldA, "UNFETCHED", 300L, 1.0f, 0L))
-        .toDF(), buckets = 4)
-    val after = graft.crawl.FrontierStore.read(spark, root).get
-      .select("url", "status").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(after == Map(
-      s"http://$pldA/x" -> "FETCHED",
-      s"http://$pldB/y" -> "FETCHED",
-      s"http://$pldA/z" -> "UNFETCHED"), s"got $after")
-    // pldA's legacy v-dir was reclaimed one commit after migration;
-    // pldB's untouched legacy bucket dir survives (still referenced)
-    assert(!new java.io.File(s"$root/b${pldBucket(pldA)}/v0").exists(),
-      "migrated bucket's legacy dir must be swept after the window")
-    assert(new java.io.File(s"$root/b${pldBucket(pldB)}/v0").exists(),
-      "untouched legacy bucket dir must survive")
+    // nothing was rewritten: the failed merge left the store as it was
+    assert(new java.io.File(s"$root/b0/v0").exists())
+    assert(!new java.io.File(s"$root/_MANIFEST_v1").exists())
   }
 }
 

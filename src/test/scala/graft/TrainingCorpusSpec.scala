@@ -115,7 +115,8 @@ class TrainingCorpusSpec extends AnyFunSuite {
   }
 
   test("sf0.1 capstone: full-stage build pins survival counts, CC rounds, flat plans") {
-    // the CorpusBench configuration run at sf0.1: every stage enabled,
+    // the sf1 capstone configuration (PERF_NOTES "TrainingCorpus.build
+    // end-to-end at sf1") run at sf0.1: every stage enabled,
     // benchmark + reference LM derived from the corpus by hash-slice.
     // One deliberate difference: a FIXED 32.0 perplexity cut (the bench
     // derives p90 at runtime) so the run is deterministic end to end
